@@ -29,7 +29,7 @@ object Bench {
       .selectExpr("get_json_object(props, '$.k')")
       .write.format("noop").mode("overwrite").save())
     warm(spark.read.format("warc")
-      .load("/root/reference/tests/data/warcfile.warc.gz").count())
+      .load(graft.sources.BenchCorpus.FixtureGz).count())
     // the two big column payloads (document text, embedding vectors):
     // whichever query sorts first otherwise pays the cold page-cache +
     // parquet-reader cost of the first full scan (~3s billed to d01)
@@ -65,8 +65,8 @@ object Bench {
     // the tier-4 threshold, so the first big extraction query (w19,
     // alphabetically before w29) was absorbing the JIT tax — measured as
     // w19 consistently SLOWER than the strictly-larger w29 in the same
-    // sweep. Driver-side loop over the 16 fixture pages, same approach
-    // as ProfileExtract's warmup.
+    // sweep. Driver-side loop over the 16 fixture pages, the warmup the
+    // README "Performance vs BASELINE.md" extraction rates were taken after.
     warm {
       val pages = spark.read.format("warc")
         .load(graft.sources.BenchCorpus.FixtureGz)

@@ -17,7 +17,8 @@ import java.util.concurrent.ArrayBlockingQueue
   * abandoning the stream early (LIMIT, task kill) never leaks the
   * thread.
   *
-  * Measured and REJECTED as a default decode wrapper (ZstdBound, r16):
+  * Measured and REJECTED as a default decode wrapper (r16, SCALING.md
+  * §1):
   * single-stream zstd scan 976 → 673 MB/s (at ~1.1 GB/s decode the
   * per-chunk budget is ~55 µs and the queue handoff + lost cache
   * locality cost more than the overlap saves), 32-way aggregate 0.59×

@@ -124,9 +124,6 @@ object Brotli {
   private val ClcLen = Array(2, 2, 2, 3, 2, 2, 2, 4, 2, 2, 2, 3, 2, 2, 2, 4)
   private val ClcValue = Array(0, 4, 3, 2, 0, 4, 3, 1, 0, 4, 3, 2, 0, 4, 3, 5)
 
-  /** Dev-only command tracing (BrotliDbg). */
-  var trace = false
-
   /** One-shot decode with an output cap. */
   def decode(data: Array[Byte], maxOutput: Long = 1L << 30): Array[Byte] = {
     val in = new BrotliInputStream(new java.io.ByteArrayInputStream(data), maxOutput)

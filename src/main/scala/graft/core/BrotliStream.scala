@@ -302,8 +302,6 @@ final class BrotliInputStream(in: InputStream, maxOutput: Long = -1L)
     copyRemaining = CopyBase(cpCode) + br.readBits(CopyExtra(cpCode))
     copyLenForContext = copyRemaining
     distanceResolved = false
-    if (Brotli.trace)
-      println(s"cmd=$cmd insert=$insertRemaining copy=$copyRemaining implicit=$implicitDistance meta=$metaRemaining")
   }
 
   /** Distance is encoded AFTER the command's literals; resolve it when
@@ -315,7 +313,6 @@ final class BrotliInputStream(in: InputStream, maxOutput: Long = -1L)
     if (metaRemaining <= 0) { copyRemaining = 0; return }
     var distance = 0
     var push = false
-    var dcodeDbg = -1
     if (implicitDistance) {
       distance = d1
     } else {
@@ -324,7 +321,6 @@ final class BrotliInputStream(in: InputStream, maxOutput: Long = -1L)
       val distCtx = math.min(copyLenForContext, 5) - 2
       val tree = distanceCodes(contextMapD(rb1(2) * 4 + distCtx) & 0xff)
       val dcode = tree.readSym(br)
-      dcodeDbg = dcode
       if (dcode == 0) distance = d1
       else if (dcode < 16) {
         distance = dcode match {
@@ -361,8 +357,6 @@ final class BrotliInputStream(in: InputStream, maxOutput: Long = -1L)
       }
     }
     val maxDist = math.min(totalOut, windowSize.toLong)
-    if (Brotli.trace)
-      println(s"  dist=$distance dcode=$dcodeDbg npostfix=$npostfix ndirect=$ndirect push=$push maxDist=$maxDist ring=$d1,$d2,$d3,$d4 out=$totalOut")
     if (distance > maxDist) {
       // static dictionary reference; not entered into the distance ring
       val word = dictionaryWord(copyRemaining, distance, maxDist)

@@ -676,7 +676,9 @@ object Html2Text {
   // adversarial generator in Html2TextSpec). One Aho-Corasick pass per
   // first-seen attr string computes the candidate-pattern bitmask and
   // only candidate regexes ever run — the JFR-dominant cost after the
-  // memo was exactly these probes on first-seen strings.
+  // memo was exactly these probes on first-seen strings (1.22-1.26x
+  // main-content throughput in an interleaved A/B; README "Performance
+  // vs BASELINE.md").
   // articleClsRe (idx 9) can match via its zero-width middle on bare
   // separator chars, so its triggers include the separator chars
   // themselves (the exact \s set java regex uses, plus _ and -): a
@@ -731,11 +733,6 @@ object Html2Text {
     while (c < 128) { t(c) = math.max(TriggerAuto.step(0, c.toChar), 0); c += 1 }
     t
   }
-  /** In-JVM A/B switch (MainContentProfile interleaves both arms in one
-    * process so the comparison shares a contention window). */
-  private[graft] var UsePrefilter =
-    !"off".equals(System.getProperty("graft.cls.prefilter"))
-
   /** Candidate-pattern bitmask for `s` — one automaton pass. ASCII-only
     * case folding: the patterns use CASE_INSENSITIVE without
     * UNICODE_CASE, which folds exactly A-Z.
@@ -791,7 +788,7 @@ object Html2Text {
         // slot 2: the candidate bitmask from ONE automaton pass —
         // probes whose trigger literals are absent short-circuit to
         // "no match" without ever running their regex
-        e(2) = if (UsePrefilter) triggerMask(s) else -1L
+        e(2) = triggerMask(s)
         map.put(s, e)
       }
       e

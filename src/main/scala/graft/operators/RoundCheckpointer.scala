@@ -40,20 +40,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * driver, run iterative operators on their own SparkSession.
   */
 private[graft] object RoundPartitions {
-  /** Dev A/B switch for disabling AQE inside tiny scopes (flipped by
-    * [[graft.tools.AqeAb]] only). MEASURED AND REJECTED as a default
-    * (r15, interleaved min-of-3 on this container): AQE-off is a wash
-    * on d15's PageRank rounds (ratio 1.03) and 40% SLOWER on d12's
-    * connected-components loop (5.12 → 7.19 s) — AQE's query-stage
-    * jobs are not dead scheduling weight even at 1-partition rounds;
-    * its runtime coalescing/empty-partition skipping pays for itself.
-    * Kept false-able only so the A/B stays re-runnable.
-    */
-  @volatile private[graft] var disableAqeInTinyScopes = false
-
   def scoped[T](spark: SparkSession, rows: Long)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
-    val aqeKey = "spark.sql.adaptive.enabled"
     val prev = spark.conf.get(key)
     val current = try prev.toInt catch { case _: NumberFormatException => 200 }
     val matched = math.max(1L, (rows + 65535) / 65536)
@@ -62,19 +50,10 @@ private[graft] object RoundPartitions {
     // reduction is a perf tweak, correctness never depends on it
     if (matched >= current || spark.streams.active.nonEmpty) body
     else {
-      val prevAqe = spark.conf.getOption(aqeKey)
       spark.conf.set(key, matched.toString)
-      // AQE stays ON by default even in tiny scopes — see the
-      // disableAqeInTinyScopes doc for the measured rejection of the
-      // "query-stage jobs are pure driver latency" hypothesis.
-      if (disableAqeInTinyScopes) spark.conf.set(aqeKey, "false")
-      try body finally {
-        spark.conf.set(key, prev)
-        prevAqe match {
-          case Some(v) => spark.conf.set(aqeKey, v)
-          case None => spark.conf.unset(aqeKey)
-        }
-      }
+      // AQE stays on in tiny scopes: turning it off was measured and
+      // rejected (a wash on d15, 40% slower on d12; SCALING.md §8c)
+      try body finally spark.conf.set(key, prev)
     }
   }
 }

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 /** Oracle-checked queries over the reference's own WARC fixture corpus
-  * (/root/reference/tests/data — 50 Common Crawl records, see FIXTURES.md).
+  * (50 Common Crawl records, built by [[graft.sources.BenchCorpus]]; see
+  * FIXTURES.md).
   *
   * These exercise the `spark.read.format("warc")` DataSource V2 end to
   * end: codec sniffing (raw/gzip/LZ4), envelope parse, HTTP split, digest
@@ -17,8 +18,7 @@ import org.apache.spark.sql.expressions.Window
   */
 object Warc {
 
-  /** Fixture corpus location (read-only). */
-  val FixtureDir = "/root/reference/tests/data"
+  import graft.sources.BenchCorpus.{FixtureDir, FixtureGz}
 
   /** Session-unique suffix for scratch dirs and memory-sink names: two
     * concurrent JVMs never race on the same tmp path or global temp
@@ -174,19 +174,11 @@ object Warc {
 
     // All three codec variants decode to the identical record stream.
     "w05_warc_codecs" -> ((s, _) => {
-      // the brotli and zstd variants live outside the read-only
-      // reference fixture dir (brotli in resources; zstd recompressed
-      // once into tmp); identical aggregates across all FIVE codecs
-      // prove codec equivalence of the whole parse
-      val brPath = graft.sources.BenchCorpus.ensureBrotliFixture(
-        s"${System.getProperty("java.io.tmpdir")}/graft_warc_br")
-      val zstPath = graft.sources.BenchCorpus.ensureZstdFixture(
-        s"${System.getProperty("java.io.tmpdir")}/graft_warc_zst")
+      // identical aggregates across all FIVE codecs prove codec
+      // equivalence of the whole parse
       s.read.format("warc")
-        .load(s"$FixtureDir/warcfile.warc",
-              s"$FixtureDir/warcfile.warc.gz",
-              s"$FixtureDir/warcfile.warc.lz4",
-              brPath, zstPath)
+        .load(Seq("warc", "warc.gz", "warc.lz4", "warc.br", "warc.zst")
+          .map(ext => s"$FixtureDir/warcfile.$ext"): _*)
         .groupBy(regexp_extract(col("filename"), "([^/]+)$", 1).as("file"))
         .agg(count(lit(1)).as("n_records"),
              sum(col("content_length")).as("sum_content_length"))
@@ -496,8 +488,7 @@ object Warc {
       org.apache.commons.io.FileUtils.deleteDirectory(dir)
       dir.mkdirs()
       val copy = new java.io.File(dir, "foreign.warc.gz")
-      java.nio.file.Files.copy(java.nio.file.Paths.get(
-        "/root/reference/tests/data/warcfile.warc.gz"), copy.toPath)
+      java.nio.file.Files.copy(java.nio.file.Paths.get(FixtureGz), copy.toPath)
       val rc = graft.tools.Cli.run(Array("index", "--members", copy.getPath),
         new java.io.PrintStream(new java.io.ByteArrayOutputStream()))
       require(rc == 0, "member-index build failed")
@@ -536,8 +527,7 @@ object Warc {
       org.apache.commons.io.FileUtils.deleteDirectory(dir)
       dir.mkdirs()
       val copy = new java.io.File(dir, "foreign.warc.gz")
-      java.nio.file.Files.copy(java.nio.file.Paths.get(
-        "/root/reference/tests/data/warcfile.warc.gz"), copy.toPath)
+      java.nio.file.Files.copy(java.nio.file.Paths.get(FixtureGz), copy.toPath)
       def totals(df: DataFrame): DataFrame =
         df.agg(count(lit(1)).as("n_records"),
           sum(col("content_length")).as("total_bytes"))
@@ -578,8 +568,7 @@ object Warc {
       org.apache.commons.io.FileUtils.deleteDirectory(dir)
       dir.mkdirs()
       val copy = new java.io.File(dir, "foreign.warc.gz")
-      java.nio.file.Files.copy(java.nio.file.Paths.get(
-        "/root/reference/tests/data/warcfile.warc.gz"), copy.toPath)
+      java.nio.file.Files.copy(java.nio.file.Paths.get(FixtureGz), copy.toPath)
       def totals(df: DataFrame): DataFrame =
         df.agg(count(lit(1)).as("n_records"),
           sum(col("content_length")).as("total_bytes"))
@@ -954,7 +943,7 @@ object Warc {
     // streaming query; the windows are re-derivable from fixture bytes).
     "w32_streaming_windows" -> ((s, _) => {
       import graft.streaming.EventTime
-      val fixture = "/root/reference/tests/data/warcfile.warc.gz"
+      val fixture = FixtureGz
       val batch = s.read.format("warc").load(fixture)
         .select(col("record_date"), col("record_type"), col("content_length"))
       val stage = Scratch.fastFresh("w32_stage").getPath
@@ -1001,7 +990,7 @@ object Warc {
     // horizon, the bounded-state property at 100 TB/day.
     "w44_streaming_sessions" -> ((s, _) => {
       import graft.functions.WarcCols
-      val fixture = "/root/reference/tests/data/warcfile.warc.gz"
+      val fixture = FixtureGz
       val batch = s.read.format("warc").option("record_types", "response")
         .load(fixture)
         .select(col("record_date").as("ts"),
@@ -1070,7 +1059,7 @@ object Warc {
       org.apache.commons.io.FileUtils.deleteDirectory(landing)
       landing.mkdirs()
       java.nio.file.Files.copy(
-        java.nio.file.Paths.get("/root/reference/tests/data/warcfile.warc.gz"),
+        java.nio.file.Paths.get(FixtureGz),
         new java.io.File(landing, "crawl-a.warc.gz").toPath)
       // crawl-b: same 16 pages under disguised URLs
       val recrawlDir = scratch("w41_recrawl")
@@ -1164,8 +1153,7 @@ object Warc {
         scratch("w35_landing"))
       org.apache.commons.io.FileUtils.deleteDirectory(landing)
       landing.mkdirs()
-      val fixture = java.nio.file.Paths.get(
-        "/root/reference/tests/data/warcfile.warc.gz")
+      val fixture = java.nio.file.Paths.get(FixtureGz)
       def land(name: String): Unit =
         java.nio.file.Files.copy(fixture, new java.io.File(landing, name).toPath)
       land("crawl-a.warc.gz")
@@ -1234,8 +1222,7 @@ object Warc {
       org.apache.commons.io.FileUtils.deleteDirectory(landing)
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
       landing.mkdirs()
-      val fixture = java.nio.file.Paths.get(
-        "/root/reference/tests/data/warcfile.warc.gz")
+      val fixture = java.nio.file.Paths.get(FixtureGz)
       def land(name: String): Unit =
         java.nio.file.Files.copy(fixture, new java.io.File(landing, name).toPath)
       land("crawl-a.warc.gz")

@@ -1,39 +1,213 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, OutputStream}
+import java.nio.charset.StandardCharsets.{ISO_8859_1, US_ASCII}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-/** Deterministic multi-file WARC bench corpus: N files, each `copies`
-  * back-to-back copies of the 50-record fixture archive. Concatenating
-  * gzip archives is valid multi-member gzip (the reference writes one
-  * member per record for exactly this reason), so each output file is a
-  * well-formed WARC with copies*50 records.
+import graft.core.{BrotliInputStream, HeaderMap, Lz4FrameOutputStream, WarcByteReader,
+  WarcParseOptions, WarcParser, WarcRecord, WarcWriter}
+
+/** The fixture set and the bench corpora derived from it.
   *
-  * This makes the BASELINE gzip-scan throughput (~10.4k records/s/core,
+  * The fixture set is Resiliparse's own test archive (50 Common Crawl
+  * records) plus the quirk files its suite derives from it (FIXTURES.md
+  * §A). All of it is built once under `java.io.tmpdir` from ONE in-repo
+  * resource, the brotli-compressed archive `graft/warcfile.warc.br`;
+  * [[FixtureDir]] is the only place tests, queries and Bench learn where
+  * the files are.
+  *
+  * The bench corpora are N files of back-to-back fixture copies.
+  * Concatenating archives is valid for every container (multi-member
+  * gzip — the reference writes one member per record for exactly this
+  * reason — back-to-back LZ4 frames and plain record streams), so each
+  * output file is a well-formed WARC with copies*50 records. This makes
+  * the BASELINE gzip-scan throughput (~10.4k records/s/core,
   * BASELINE.md) measurable: w17/w18 scan this corpus and their bench
   * timings give records/s.
   */
 object BenchCorpus {
 
-  val FixtureGz = "/root/reference/tests/data/warcfile.warc.gz"
-  /** The same 50 records, uncompressed / LZ4-framed (the reference ships
-    * all three; its benchmark table times each codec separately).
-    * Concatenation is valid for all three containers: multi-member gzip,
-    * back-to-back LZ4 frames (the reader opens with
-    * decompressConcatenated), and plain WARC record streams.
-    */
-  val FixtureRaw = "/root/reference/tests/data/warcfile.warc"
-  val FixtureLz4 = "/root/reference/tests/data/warcfile.warc.lz4"
+  val FixtureResource = "/graft/warcfile.warc.br"
+  /** The published shape of the decoded fixture (FIXTURES.md §A,
+    * tests/fastwarc/test_warc.py:21-22); decoding fails loudly on any
+    * other. */
+  val FixtureBytes = 550336
   val RecordsPerCopy = 50
+  val FixtureResponses = 16
+  /** Record size of `block-sized-records.warc*`: WarcByteReader's
+    * default buffer, so every record boundary is a buffer refill. */
+  val ReaderBlock = 64 * 1024
 
-  /** Writer-unique temp path: two JVMs racing the same ensure (the
-    * synchronized blocks are per-JVM only) must never interleave writes
-    * into ONE tmp file — a fixed tmp name lets one JVM atomically
-    * promote the OTHER's partially written bytes. pid + nano suffix
-    * gives each writer its own tmp; the atomic move stays the commit.
-    */
-  private def tmpFor(d: java.nio.file.Path, name: String): java.nio.file.Path = {
+  /** Directory holding the whole fixture set, built on first use; FIXTURES.md
+    * §A lists each file and its derivation. */
+  lazy val FixtureDir: String =
+    ensureFixtures(Paths.get(System.getProperty("java.io.tmpdir"), "graft_fixtures"))
+  lazy val FixtureRaw: String = s"$FixtureDir/warcfile.warc"
+  lazy val FixtureGz: String = s"$FixtureDir/warcfile.warc.gz"
+  lazy val FixtureLz4: String = s"$FixtureDir/warcfile.warc.lz4"
+
+  // bump when a derivation changes: an older set is then rebuilt in place
+  private val FixtureVersion = "READY-v1"
+
+  private def ensureFixtures(d: Path): String = synchronized {
+    if (Files.exists(d.resolve(FixtureVersion))) return d.toString
+    val br = {
+      val in = getClass.getResourceAsStream(FixtureResource)
+      if (in == null) throw new IllegalStateException(s"missing resource $FixtureResource")
+      try in.readAllBytes() finally in.close()
+    }
+    val raw = new BrotliInputStream(new ByteArrayInputStream(br)).readAllBytes()
+    val records = checkedRecords(raw)
+    val chunks = records.indices.map { i =>
+      val end = if (i + 1 < records.size) records(i + 1).offset else raw.length.toLong
+      java.util.Arrays.copyOfRange(raw, records(i).offset.toInt, end.toInt)
+    }
+    def gzip(recs: Seq[Array[Byte]])(out: OutputStream): Unit =
+      recs.foreach(r => out.write(gzipMember(r)))
+    def lz4(recs: Seq[Array[Byte]])(out: OutputStream): Unit =
+      recs.foreach(r => out.write(lz4Frame(r)))
+    writeAtomic(d.resolve("warcfile.warc"))(_.write(raw))
+    writeAtomic(d.resolve("warcfile.warc.gz"))(gzip(chunks))
+    writeAtomic(d.resolve("warcfile.warc.lz4"))(lz4(chunks))
+    writeAtomic(d.resolve("warcfile.warc.br"))(_.write(br))
+    writeAtomic(d.resolve("warcfile.warc.zst"))(out =>
+      WarcWriter.recompress(new ByteArrayInputStream(raw), out, WarcWriter.Zstd))
+    writeAtomic(d.resolve("clipped.warc.gz"))(_.write(clipped(chunks)))
+    writeAtomic(d.resolve("clueweb-quirk.warc.gz"))(gzip(cluewebQuirk(records)))
+    val blocks = blockSizedRecords(records)
+    writeAtomic(d.resolve("block-sized-records.warc"))(out => blocks.foreach(out.write))
+    writeAtomic(d.resolve("block-sized-records.warc.gz"))(gzip(blocks))
+    writeAtomic(d.resolve("block-sized-records.warc.lz4"))(lz4(blocks))
+    Files.write(d.resolve(FixtureVersion), Array.emptyByteArray)
+    d.toString
+  }
+
+  /** The decoded fixture's records, or an IllegalStateException unless
+    * it is exactly [[FixtureBytes]] long and parses cleanly to
+    * [[RecordsPerCopy]] records of which [[FixtureResponses]] are
+    * responses. */
+  private[graft] def checkedRecords(raw: Array[Byte]): Vector[WarcRecord] = {
+    def fail(msg: String) = throw new IllegalStateException(s"$FixtureResource: $msg")
+    if (raw.length != FixtureBytes)
+      fail(s"decodes to ${raw.length} B, expected $FixtureBytes B")
+    val recs = new WarcParser(new WarcByteReader(new ByteArrayInputStream(raw)),
+      "warcfile.warc", WarcParseOptions(parseHttp = false)).toVector
+    recs.find(_.error.isDefined).foreach(r => fail(s"record at ${r.offset}: ${r.error.get}"))
+    val responses = recs.count(_.recordType == "response")
+    if (recs.size != RecordsPerCopy || responses != FixtureResponses)
+      fail(s"${recs.size} records / $responses responses, " +
+        s"expected $RecordsPerCopy / $FixtureResponses")
+    recs
+  }
+
+  /** One gzip member at zlib level 9. */
+  private def gzipMember(data: Array[Byte]): Array[Byte] = {
+    val bos = new ByteArrayOutputStream(data.length / 3 + 32)
+    val gz = new java.util.zip.GZIPOutputStream(bos) { `def`.setLevel(9) }
+    gz.write(data)
+    gz.close()
+    bos.toByteArray
+  }
+
+  /** One LZ4 frame in the reference writer's layout: 64 KiB linked
+    * blocks, no content checksum. */
+  private def lz4Frame(data: Array[Byte]): Array[Byte] = {
+    val bos = new ByteArrayOutputStream()
+    val w = new Lz4FrameOutputStream(bos, linked = true, contentChecksum = false)
+    w.write(data)
+    w.close()
+    bos.toByteArray
+  }
+
+  /** Serialize a record with recomputed Content-Length and block digest
+    * (the records are parsed without an HTTP split, so the payload
+    * digest header is written as it is). */
+  private def serialize(rec: WarcRecord): Array[Byte] = {
+    val bos = new ByteArrayOutputStream()
+    WarcWriter.writeRecord(rec, bos, checksum = true)
+    bos.toByteArray
+  }
+
+  /** `clipped.warc.gz` — the EOF / short-read case: the gzip members of
+    * the first five records, then the first half of the sixth (a
+    * response), so the archive ends inside a deflate stream after that
+    * record's header block. */
+  private def clipped(chunks: Seq[Array[Byte]]): Array[Byte] = {
+    val bos = new ByteArrayOutputStream()
+    chunks.take(5).foreach(c => bos.write(gzipMember(c)))
+    val cut = gzipMember(chunks(5))
+    bos.write(cut, 0, cut.length / 2)
+    bos.toByteArray
+  }
+
+  /** `clueweb-quirk.warc.gz` — ClueWeb09's legacy shape: the warcinfo
+    * record plus 29 responses (the 16 fixture responses, cycled), every
+    * version line `WARC/0.18` and every HTTP header block LF-only. Each
+    * response gets a fresh deterministic record id and a `WARC-TREC-ID`;
+    * bodies are unchanged, so their payload digests stay valid and only
+    * the block digest is recomputed. One gzip member per record. */
+  private def cluewebQuirk(records: Vector[WarcRecord]): Vector[Array[Byte]] = {
+    val responses = records.filter(_.recordType == "response")
+    val info = records.find(_.recordType == "warcinfo").get
+    val quirked = (0 until 29).map { i =>
+      val r = responses(i % responses.size)
+      val id = java.util.UUID.nameUUIDFromBytes(s"clueweb-quirk-$i".getBytes(US_ASCII))
+      r.copy(content = lfHttpHeaders(r.content), headers = r.headers
+        .updated("WARC-Record-ID", s"<urn:uuid:$id>")
+        .append("WARC-TREC-ID", f"clueweb09-en0000-00-$i%05d"))
+    }
+    (info +: quirked).map(r => serialize(r.copy(version = "WARC/0.18"))).toVector
+  }
+
+  /** The block with its HTTP header lines (up to the blank line) ending
+    * in LF instead of CRLF; the body is left as is. */
+  private def lfHttpHeaders(block: Array[Byte]): Array[Byte] = {
+    val text = new String(block, ISO_8859_1)
+    val end = text.indexOf("\r\n\r\n")
+    require(end > 0, "response block without an HTTP header terminator")
+    val head = text.substring(0, end).replace("\r\n", "\n") + "\n\n"
+    head.getBytes(ISO_8859_1) ++ block.drop(end + 4)
+  }
+
+  /** `block-sized-records.warc` — the buffer-boundary case: the first
+    * three fixture responses, each body padded with LF (or cut) so the
+    * serialized record is exactly [[ReaderBlock]] bytes. Record
+    * boundaries then fall on offsets 0, 65,536 and 131,072, where the
+    * reader's buffer refills. The payload digest no longer applies and
+    * is dropped. */
+  private def blockSizedRecords(records: Vector[WarcRecord]): Vector[Array[Byte]] =
+    records.filter(_.recordType == "response").take(3).map { r0 =>
+      val r = r0.copy(headers = HeaderMap(
+        r0.headers.entries.filterNot(_._1.equalsIgnoreCase("WARC-Payload-Digest"))))
+      def sized(n: Int) = {
+        val c = java.util.Arrays.copyOf(r.content, n)
+        if (n > r.content.length) java.util.Arrays.fill(c, r.content.length, n, '\n'.toByte)
+        r.copy(content = c)
+      }
+      // the header block depends on the length only through its digit
+      // count, so one trial serialization fixes the block length
+      val probe = serialize(sized(30000))
+      val out = serialize(sized(30000 + ReaderBlock - probe.length))
+      require(out.length == ReaderBlock, s"block-sized record is ${out.length} B")
+      out
+    }
+
+  /** Write `target` through a writer-unique tmp file (pid + nano
+    * suffix) and one atomic move. The synchronized blocks here are
+    * per-JVM only: with a fixed tmp name a second JVM racing the same
+    * ensure could promote the first one's partially written bytes. */
+  private def writeAtomic(target: Path)(write: OutputStream => Unit): Unit = {
+    val d = target.getParent
+    Files.createDirectories(d)
     sweepStaleTmps(d)
-    d.resolve(s".$name.${ProcessHandle.current.pid}-${System.nanoTime()}.tmp")
+    val tmp = d.resolve(
+      s".${target.getFileName}.${ProcessHandle.current.pid}-${System.nanoTime()}.tmp")
+    try {
+      val out = new java.io.BufferedOutputStream(Files.newOutputStream(tmp), 64 * 1024)
+      try write(out) finally out.close()
+      Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
+        StandardCopyOption.REPLACE_EXISTING)
+    } finally Files.deleteIfExists(tmp)
   }
 
   /** Unique tmp names never collide, so a crashed writer's tmp is no
@@ -41,8 +215,7 @@ object BenchCorpus {
     * debris older than an hour (never a LIVE writer's file: any
     * in-flight ensure finishes in seconds).
     */
-  private def sweepStaleTmps(d: java.nio.file.Path): Unit = {
-    if (!Files.isDirectory(d)) return
+  private def sweepStaleTmps(d: Path): Unit = {
     val cutoff = System.currentTimeMillis() - 3600L * 1000
     val listing = Files.list(d)
     try listing.forEach { p =>
@@ -76,12 +249,8 @@ object BenchCorpus {
       } finally stale.close()
       val src = Files.readAllBytes(Paths.get(srcPath))
       (0 until files).foreach { i =>
-        val tmp = tmpFor(d, s"part-$i")
-        val out = Files.newOutputStream(tmp)
-        try (0 until copiesPerFile).foreach(_ => out.write(src))
-        finally out.close()
-        Files.move(tmp, d.resolve(f"bench-$i%03d$ext"),
-          StandardCopyOption.REPLACE_EXISTING)
+        writeAtomic(d.resolve(f"bench-$i%03d$ext"))(out =>
+          (0 until copiesPerFile).foreach(_ => out.write(src)))
       }
       Files.write(marker, Array.emptyByteArray)
       dir
@@ -97,31 +266,13 @@ object BenchCorpus {
   def ensureLz4(dir: String, files: Int, copiesPerFile: Int): String =
     ensureFrom(dir, files, copiesPerFile, FixtureLz4, ".warc.lz4")
 
-  /** `.warc.zst` variant: the fixture recompressed frame-per-record
-    * once (cached beside the corpus), then concatenated like the
-    * others — concatenated zstd frame chains are legal archives.
+  /** `.warc.zst` variant (frame-per-record fixture, concatenated like
+    * the others — concatenated zstd frame chains are legal archives).
     * No reference row exists for zstd (fastwarc has no zstd); the
     * bench reports it as an extra informational column.
     */
-  def ensureZstd(dir: String, files: Int, copiesPerFile: Int): String = synchronized {
-    val d = Paths.get(dir)
-    val zstFixture = d.resolve("fixture.warc.zst")
-    if (!Files.exists(zstFixture)) {
-      Files.createDirectories(d)
-      val out = new java.io.ByteArrayOutputStream()
-      val in = new java.io.FileInputStream(FixtureGz)
-      try graft.core.WarcWriter.recompress(in, out, graft.core.WarcWriter.Zstd)
-      finally in.close()
-      // tmp + atomic move (same pattern as ensureFrom/ensureTextFixture):
-      // a crash or a second JVM racing this write (synchronized is
-      // per-JVM only) must not leave a truncated cached fixture that
-      // poisons every later bench/scale run
-      val tmp = tmpFor(d, "fixture.warc.zst")
-      Files.write(tmp, out.toByteArray)
-      Files.move(tmp, zstFixture, StandardCopyOption.REPLACE_EXISTING)
-    }
-    ensureFrom(dir, files, copiesPerFile, zstFixture.toString, ".warc.zst")
-  }
+  def ensureZstd(dir: String, files: Int, copiesPerFile: Int): String =
+    ensureFrom(dir, files, copiesPerFile, s"$FixtureDir/warcfile.warc.zst", ".warc.zst")
 
   def totalRecords(files: Int = 10, copiesPerFile: Int = 20): Long =
     files.toLong * copiesPerFile * RecordsPerCopy
@@ -132,14 +283,8 @@ object BenchCorpus {
   def ensureTextFixture(dir: String): String = synchronized {
     val d = Paths.get(dir)
     val f = d.resolve("lines.txt")
-    if (!Files.exists(f)) {
-      Files.createDirectories(d)
-      val tmp = tmpFor(d, "lines.txt")
-      val sb = new StringBuilder
-      (0 until 1000).foreach(i => sb.append("line-").append(i).append('\n'))
-      Files.write(tmp, sb.toString.getBytes("ascii"))
-      Files.move(tmp, f, StandardCopyOption.REPLACE_EXISTING)
-    }
+    if (!Files.exists(f)) writeAtomic(f)(out =>
+      (0 until 1000).foreach(i => out.write(s"line-$i\n".getBytes(US_ASCII))))
     f.toString
   }
 
@@ -152,23 +297,23 @@ object BenchCorpus {
     val f = d.resolve("members.warc.gz")
     val side = d.resolve("members.offsets")
     if (!Files.exists(side)) {
-      Files.createDirectories(d)
-      val in = Files.newInputStream(Paths.get(FixtureGz))
-      val (stream, _) = graft.core.WarcCodecs.open(in)
-      val parser = new graft.core.WarcParser(
-        new graft.core.WarcByteReader(stream), "",
-        graft.core.WarcParseOptions(parseHttp = false))
-      val tmp = tmpFor(d, "members.warc.gz")
-      val out = Files.newOutputStream(tmp)
-      val w = new graft.core.WarcWriter.RecordStreamWriter(
-        out, graft.core.WarcWriter.Gzip)
-      val offsets = try parser.map(w.write).toVector finally { w.close(); in.close() }
-      Files.move(tmp, f, StandardCopyOption.REPLACE_EXISTING)
-      Files.write(side, offsets.mkString("\n").getBytes("ascii"))
+      var offsets = Vector.empty[Long]
+      writeAtomic(f) { out =>
+        val w = new WarcWriter.RecordStreamWriter(out, WarcWriter.Gzip)
+        try offsets = fixtureRecords().map(w.write).toVector finally w.finishCodecs()
+      }
+      writeAtomic(side)(_.write(offsets.mkString("\n").getBytes(US_ASCII)))
     }
-    val offsets = new String(Files.readAllBytes(side), "ascii")
+    val offsets = new String(Files.readAllBytes(side), US_ASCII)
       .split('\n').toSeq.filter(_.nonEmpty).map(_.toLong)
     (f.toString, offsets)
+  }
+
+  /** The fixture's records, envelope only (no HTTP split). */
+  private def fixtureRecords(): Vector[WarcRecord] = {
+    val in = Files.newInputStream(Paths.get(FixtureRaw))
+    try new WarcParser(new WarcByteReader(in), "", WarcParseOptions(parseHttp = false)).toVector
+    finally in.close()
   }
 
   /** Collection of the SAME 50 fixture records re-membered once per
@@ -183,34 +328,26 @@ object BenchCorpus {
     */
   def ensureCollection(dir: String): Seq[String] = synchronized {
     val d = Paths.get(dir)
-    Files.createDirectories(d)
-    def build(name: String)(write: java.io.OutputStream => Unit): String = {
+    def build(name: String)(write: OutputStream => Unit): String = {
       val f = d.resolve(name)
-      if (!Files.exists(f)) {
-        val bos = new java.io.ByteArrayOutputStream()
-        write(bos)
-        val tmp = tmpFor(d, name)
-        Files.write(tmp, bos.toByteArray)
-        Files.move(tmp, f, StandardCopyOption.REPLACE_EXISTING)
-      }
+      if (!Files.exists(f)) writeAtomic(f)(write)
       f.toString
     }
-    import graft.core.WarcWriter
     val plain = Seq[(String, WarcWriter.Codec)](
       ("collection-raw.warc", WarcWriter.Raw),
       ("collection-gzip.warc.gz", WarcWriter.Gzip),
       ("collection-lz4.warc.lz4", WarcWriter.Lz4),
       ("collection-zstd.warc.zst", WarcWriter.Zstd)
     ).map { case (name, codec) =>
-      build(name) { bos =>
+      build(name) { out =>
         val in = Files.newInputStream(Paths.get(FixtureGz))
-        try WarcWriter.recompress(in, bos, codec)
+        try WarcWriter.recompress(in, out, codec)
         finally in.close()
       }
     }
-    val dict = build("collection-dict.warc.zst") { bos =>
+    val dict = build("collection-dict.warc.zst") { out =>
       WarcWriter.recompressZstdTrained(
-        () => Files.newInputStream(Paths.get(FixtureGz)), bos)
+        () => Files.newInputStream(Paths.get(FixtureGz)), out)
     }
     plain :+ dict
   }
@@ -223,99 +360,35 @@ object BenchCorpus {
     * independently known.
     */
   def ensureCorrupted(dir: String): String = synchronized {
-    val d = Paths.get(dir)
-    val f = d.resolve("corrupted.warc")
+    val f = Paths.get(dir).resolve("corrupted.warc")
     if (!Files.exists(f)) {
-      Files.createDirectories(d)
-      val in = Files.newInputStream(Paths.get(FixtureGz))
-      val (stream, _) = graft.core.WarcCodecs.open(in)
-      val parser = new graft.core.WarcParser(
-        new graft.core.WarcByteReader(stream), "",
-        graft.core.WarcParseOptions(parseHttp = false))
       // serialize each record individually (raw codec) to splice bytes
-      val serialized = try parser.map { rec =>
-        val bos = new java.io.ByteArrayOutputStream()
-        val w = new graft.core.WarcWriter.RecordStreamWriter(
-          bos, graft.core.WarcWriter.Raw)
-        w.write(rec); w.close()
+      val serialized = fixtureRecords().map { rec =>
+        val bos = new ByteArrayOutputStream()
+        WarcWriter.writeRecord(rec, bos)
         bos.toByteArray
-      }.toVector finally in.close()
-      val out = new java.io.ByteArrayOutputStream()
-      serialized.take(10).foreach(out.write)
-      out.write("#garbage, not a WARC line\r\nstill not one\r\n".getBytes("ascii"))
-      serialized.slice(10, 49).foreach(out.write)
+      }
       // final record: keep the full header block plus 10 payload bytes
       val last = serialized(49)
-      val headerEnd = {
-        var i = 0
-        var at = -1
-        while (at < 0 && i < last.length - 3) {
-          if (last(i) == '\r' && last(i + 1) == '\n' &&
-              last(i + 2) == '\r' && last(i + 3) == '\n') at = i + 4
-          i += 1
-        }
-        require(at > 0, "no header terminator in serialized record")
-        at
+      val headerEnd = new String(last, US_ASCII).indexOf("\r\n\r\n") + 4
+      require(headerEnd > 4, "no header terminator in serialized record")
+      writeAtomic(f) { out =>
+        serialized.take(10).foreach(out.write)
+        out.write("#garbage, not a WARC line\r\nstill not one\r\n".getBytes(US_ASCII))
+        serialized.slice(10, 49).foreach(out.write)
+        out.write(last, 0, headerEnd + 10)
       }
-      out.write(last, 0, headerEnd + 10)
-      val tmp = d.resolve(".corrupted.tmp")
-      Files.write(tmp, out.toByteArray)
-      Files.move(tmp, f, StandardCopyOption.REPLACE_EXISTING)
     }
     f.toString
   }
 
   /** Fixture archive recompressed gzip -> LZ4 (`recompress_warc`, w23). */
   def ensureRecompressed(dir: String): String = synchronized {
-    val d = Paths.get(dir)
-    val f = d.resolve("recompressed.warc.lz4")
-    if (!Files.exists(f)) {
-      Files.createDirectories(d)
-      val tmp = d.resolve(".recompressed.tmp")
+    val f = Paths.get(dir).resolve("recompressed.warc.lz4")
+    if (!Files.exists(f)) writeAtomic(f) { out =>
       val in = Files.newInputStream(Paths.get(FixtureGz))
-      val out = Files.newOutputStream(tmp)
-      try graft.core.WarcWriter.recompress(in, out, graft.core.WarcWriter.Lz4)
-      finally { out.close(); in.close() }
-      Files.move(tmp, f, StandardCopyOption.REPLACE_EXISTING)
-    }
-    f.toString
-  }
-
-  /** Materialize the brotli-compressed fixture archive (a resource — the
-    * reference's fixture dir is read-only) so the `warc` source can scan
-    * it by path; returns the file path.
-    */
-  /** Single recompressed `.warc.zst` fixture (for the w05 five-codec
-    * equivalence query; trained-dict variants are exercised by w48 and
-    * the spec suite).
-    */
-  def ensureZstdFixture(dir: String): String = synchronized {
-    val d = Paths.get(dir)
-    val f = d.resolve("warcfile.warc.zst")
-    if (!Files.exists(f)) {
-      Files.createDirectories(d)
-      val out = new java.io.ByteArrayOutputStream()
-      val in = new java.io.FileInputStream(FixtureGz)
-      try graft.core.WarcWriter.recompress(in, out, graft.core.WarcWriter.Zstd)
+      try WarcWriter.recompress(in, out, WarcWriter.Lz4)
       finally in.close()
-      val tmp = d.resolve(".warcfile.warc.zst.tmp")
-      Files.write(tmp, out.toByteArray)
-      Files.move(tmp, f, StandardCopyOption.REPLACE_EXISTING)
-    }
-    f.toString
-  }
-
-  def ensureBrotliFixture(dir: String): String = synchronized {
-    val d = Paths.get(dir)
-    val f = d.resolve("warcfile.warc.br")
-    if (!Files.exists(f)) {
-      Files.createDirectories(d)
-      val in = getClass.getResourceAsStream("/graft/warcfile.warc.br")
-      require(in != null, "missing warcfile.warc.br resource")
-      val bytes = try in.readAllBytes() finally in.close()
-      val tmp = d.resolve(".warcfile.warc.br.tmp")
-      Files.write(tmp, bytes)
-      Files.move(tmp, f, StandardCopyOption.REPLACE_EXISTING)
     }
     f.toString
   }
@@ -365,7 +438,6 @@ object BenchCorpus {
     val d = Paths.get(dir)
     val marker = d.resolve("READY-v2") // v2: real brotli body
     if (Files.exists(marker)) return dir
-    Files.createDirectories(d)
     val date = java.time.Instant.parse("2020-08-08T16:00:00Z")
     val recs = Seq(
       ("gzip", httpResponse(gz(("gzip body content. " * 50).getBytes("ascii")),
@@ -379,15 +451,14 @@ object BenchCorpus {
       ("br", httpResponse(java.util.Base64.getDecoder.decode(
         "G7ADAMRtbF3Han6lEwRGdIoKo5pVra8Lcj6G32YGAA=="),
         Seq("Content-Encoding: br"))))
-    val tmp = d.resolve(".encoded.tmp")
-    val out = Files.newOutputStream(tmp)
-    val w = new graft.core.WarcWriter.RecordStreamWriter(out, graft.core.WarcWriter.Gzip)
-    try recs.foreach { case (label, content) =>
-      w.write(graft.core.WarcWriter.buildRecord("response", content,
-        targetUri = Some(s"http://example.com/$label"), date = date,
-        contentType = Some("application/http; msgtype=response")))
-    } finally { w.close() }
-    Files.move(tmp, d.resolve("encoded.warc.gz"), StandardCopyOption.REPLACE_EXISTING)
+    writeAtomic(d.resolve("encoded.warc.gz")) { out =>
+      val w = new WarcWriter.RecordStreamWriter(out, WarcWriter.Gzip)
+      try recs.foreach { case (label, content) =>
+        w.write(WarcWriter.buildRecord("response", content,
+          targetUri = Some(s"http://example.com/$label"), date = date,
+          contentType = Some("application/http; msgtype=response")))
+      } finally w.finishCodecs()
+    }
     Files.write(marker, Array.emptyByteArray)
     dir
   }

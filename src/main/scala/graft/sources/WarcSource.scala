@@ -190,18 +190,28 @@ object WarcInput {
     }
   }
 
-  /** Expand globs / directories into concrete files (driver side). */
+  /** Expand globs / directories into concrete files (driver side). A
+    * path that matches nothing contributes no files: a streaming landing
+    * directory may start empty. */
   def listFiles(paths: Seq[String], conf: Configuration): Seq[FileStatus] =
-    paths.flatMap { p0 =>
-      val p = normalizeScheme(p0, conf)
-      val hp = new Path(p)
-      val fs = hp.getFileSystem(conf)
-      val matched = Option(fs.globStatus(hp)).map(_.toSeq).getOrElse(Seq.empty)
-      matched.flatMap { st =>
-        if (st.isDirectory) fs.listStatus(st.getPath).toSeq.filter(_.isFile)
-        else Seq(st)
-      }
-    }
+    paths.flatMap(p => expand(p, conf).getOrElse(Seq.empty))
+
+  /** [[listFiles]] for batch scans: like parquet, a missing path or a
+    * glob that matches nothing is Spark's PATH_NOT_FOUND analysis error,
+    * never a silent empty scan. An existing empty directory is 0 rows. */
+  def listBatchFiles(paths: Seq[String], conf: Configuration): Seq[FileStatus] =
+    paths.flatMap(p => expand(p, conf).getOrElse(
+      throw org.apache.spark.sql.GraftColumnBridge.dataPathNotExistError(p)))
+
+  /** The files under `p0`, or None when it matches no path at all. */
+  private def expand(p0: String, conf: Configuration): Option[Seq[FileStatus]] = {
+    val hp = new Path(normalizeScheme(p0, conf))
+    val fs = hp.getFileSystem(conf)
+    Option(fs.globStatus(hp)).filter(_.nonEmpty).map(_.toSeq.flatMap { st =>
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.filter(_.isFile)
+      else Seq(st)
+    })
+  }
 
   /** Plain `http(s)://` archive URLs (the reference CLI's direct
     * Common-Crawl-over-HTTPS streaming, fastwarc-py/fastwarc/cli.py:
@@ -655,7 +665,7 @@ class WarcScan(
   override def planInputPartitions(): Array[InputPartition] = {
     val conf = WarcInput.withHttpFs(
       org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
-    val files = WarcInput.listFiles(WarcInput.paths(options), conf)
+    val files = WarcInput.listBatchFiles(WarcInput.paths(options), conf)
     WarcPlanner.plan(files, options, conf)
   }
 

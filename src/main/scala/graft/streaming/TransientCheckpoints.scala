@@ -32,7 +32,7 @@ object TransientCheckpoints {
   //   and re-COMPILES generated code for every micro-batch
   //   (IncrementalExecution); for gauge batches of a few hundred rows
   //   the compile dwarfs the interpreted evaluation it buys. Measured
-  //   by StreamingFloorProbe on the d28 shape: warm drive 2.3-2.6 s →
+  //   on the d28 shape (SCALING.md §8): warm drive 2.3-2.6 s →
   //   2.0-2.2 s (per-batch triggerExecution 340-390 → 320-340 ms).
   //   Production streams keep codegen: at real batch sizes the
   //   compile amortizes — this is gauge-drive scoping only.

@@ -2,9 +2,10 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
 
-/** Bridge to the private[sql] Column<->Expression converters — the
-  * standard extension-library pattern for exposing native Catalyst
-  * expressions (graft.plans.*) through the public Column API.
+/** Bridge to private[sql] helpers: the Column<->Expression converters —
+  * the standard extension-library pattern for exposing native Catalyst
+  * expressions (graft.plans.*) through the public Column API — and
+  * Spark's own error constructors.
   */
 object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -22,4 +23,8 @@ object GraftColumnBridge {
       case Some(s: classic.SparkSession) => s.expression(c)
       case _ => classic.ExpressionUtils.expression(c)
     }
+
+  /** Spark's own PATH_NOT_FOUND analysis error, the one parquet raises. */
+  def dataPathNotExistError(path: String): Throwable =
+    errors.QueryCompilationErrors.dataPathNotExistError(path)
 }

@@ -119,7 +119,7 @@ class AsyncChunkInputStreamSpec extends AnyFunSuite {
       .appName("async-decode-spec").getOrCreate()
     try {
       for (f <- Seq("warcfile.warc", "warcfile.warc.gz", "warcfile.warc.lz4")) {
-        val path = s"/root/reference/tests/data/$f"
+        val path = s"${graft.sources.BenchCorpus.FixtureDir}/$f"
         def ids(async: Boolean) = spark.read.format("warc")
           .option("async_decode", async)
           .load(path).select("record_id", "offset").collect()

@@ -128,13 +128,10 @@ class BrotliSpec extends AnyFunSuite {
 
   test("scans a .warc.br archive through the warc codec layer") {
     // whole fixture archive, brotli-compressed by the reference encoder
-    val tmp = java.nio.file.Files.createTempDirectory("brwarc")
-    val f = tmp.resolve("warcfile.warc.br")
-    java.nio.file.Files.write(f, res("warcfile.warc.br"))
-    val (stream, codec) = WarcCodecs.openWithName(
-      new java.io.FileInputStream(f.toFile), f.toString)
+    val f = s"${graft.sources.BenchCorpus.FixtureDir}/warcfile.warc.br"
+    val (stream, codec) = WarcCodecs.openWithName(new java.io.FileInputStream(f), f)
     assert(codec == WarcCodecs.Br)
-    val records = new WarcParser(new WarcByteReader(stream), f.toString).toVector
+    val records = new WarcParser(new WarcByteReader(stream), f).toVector
     assert(records.size == 50)
     assert(records.count(_.recordType == "response") == 16)
     assert(records.forall(_.error.isEmpty))

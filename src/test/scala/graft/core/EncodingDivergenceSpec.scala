@@ -240,7 +240,7 @@ class EncodingDivergenceSpec extends AnyFunSuite {
     (549712L, "request", "-", "utf-8", "EMPTY"))
 
   test("fixture enumeration: all 50 records detect to the pinned verdict table") {
-    val path = "/root/reference/tests/data/warcfile.warc"
+    val path = graft.sources.BenchCorpus.FixtureRaw
     val in = new java.io.FileInputStream(path)
     val parser = new WarcParser(new WarcByteReader(in), path,
       WarcParseOptions(parseHttp = true))
@@ -274,7 +274,7 @@ class EncodingDivergenceSpec extends AnyFunSuite {
       "statistically (no meta probe), and raw ICU alone would not") {
     // record 39775: 104 KB page, ~18% windows-1251 Cyrillic amid ASCII
     // markup/JS — the case uchardet gets right and undiluted ICU misses
-    val in = new java.io.FileInputStream("/root/reference/tests/data/warcfile.warc")
+    val in = new java.io.FileInputStream(graft.sources.BenchCorpus.FixtureRaw)
     val parser = new WarcParser(new WarcByteReader(in),
       "warcfile.warc", WarcParseOptions(parseHttp = true))
     val body = try parser.find(_.offset == 39775L).get.http.get.body

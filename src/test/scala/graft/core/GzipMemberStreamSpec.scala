@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class GzipMemberStreamSpec extends AnyFunSuite {
 
-  private val foreignGz = "/root/reference/tests/data/warcfile.warc.gz"
+  private val foreignGz = graft.sources.BenchCorpus.FixtureGz
   private def foreignBytes =
     java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(foreignGz))
 

@@ -23,8 +23,8 @@ class Lz4StreamSpec extends AnyFunSuite {
       new ByteArrayInputStream(bytes), true))
 
   private val fixtures = Seq(
-    "/root/reference/tests/data/warcfile.warc.lz4",
-    "/root/reference/tests/data/block-sized-records.warc.lz4")
+    graft.sources.BenchCorpus.FixtureLz4,
+    s"${graft.sources.BenchCorpus.FixtureDir}/block-sized-records.warc.lz4")
 
   test("byte-identical to commons-compress on dependent-block fixtures") {
     for (f <- fixtures) {
@@ -86,7 +86,7 @@ class Lz4StreamSpec extends AnyFunSuite {
 
   test("round-trips our own writer's frames (independent blocks)") {
     val src = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/tests/data/warcfile.warc.gz"))
+      java.nio.file.Paths.get(graft.sources.BenchCorpus.FixtureGz))
     val recompressed = new ByteArrayOutputStream()
     WarcWriter.recompress(new ByteArrayInputStream(src), recompressed, WarcWriter.Lz4)
     val bytes = recompressed.toByteArray
@@ -152,7 +152,7 @@ class Lz4StreamSpec extends AnyFunSuite {
       ("the quick brown fox " * (40 * 1024)).getBytes,        // 800 KB, cross-block matches
       (0 until 300 * 1024).map(i => (i % 251).toByte).toArray, // period-251 runs
       java.nio.file.Files.readAllBytes(                       // real mixed content
-        java.nio.file.Paths.get("/root/reference/tests/data/warcfile.warc")))
+        java.nio.file.Paths.get(graft.sources.BenchCorpus.FixtureRaw)))
     for {
       payload <- payloads
       linked <- Seq(true, false)

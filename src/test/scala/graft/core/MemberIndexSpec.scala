@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class MemberIndexSpec extends AnyFunSuite {
 
-  private val foreignGz = "/root/reference/tests/data/warcfile.warc.gz"
+  private val foreignGz = graft.sources.BenchCorpus.FixtureGz
 
   test("gzip walk over the reference's own archive finds record-per-member " +
       "boundaries that each start with gzip magic") {

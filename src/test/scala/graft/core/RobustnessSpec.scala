@@ -10,7 +10,7 @@ class RobustnessSpec extends AnyFunSuite {
 
   private val fixtureBytes =
     java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/tests/data/warcfile.warc"))
+      java.nio.file.Paths.get(graft.sources.BenchCorpus.FixtureRaw))
 
   /** Dies with IOException after serving `failAt` bytes (once per
     * instance); a fresh instance serves from the start.

@@ -14,9 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
 class WarcFuzzSpec extends AnyFunSuite {
 
   private val raw = java.nio.file.Files.readAllBytes(
-    java.nio.file.Paths.get("/root/reference/tests/data/warcfile.warc"))
+    java.nio.file.Paths.get(graft.sources.BenchCorpus.FixtureRaw))
   private val gz = java.nio.file.Files.readAllBytes(
-    java.nio.file.Paths.get("/root/reference/tests/data/warcfile.warc.gz"))
+    java.nio.file.Paths.get(graft.sources.BenchCorpus.FixtureGz))
 
   private def parseAll(bytes: Array[Byte], recipe: String): (Int, Int) = {
     val parser = new WarcParser(
@@ -85,7 +85,7 @@ class WarcFuzzSpec extends AnyFunSuite {
   test("lz4 container: 300 mutants through the from-scratch frame decoder " +
       "never throw") {
     val lz4 = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/tests/data/warcfile.warc.lz4"))
+      java.nio.file.Paths.get(graft.sources.BenchCorpus.FixtureLz4))
     val rnd = new java.util.Random(0x5eed03)
     for (iter <- 0 until 300) {
       val (bytes, recipe) = rnd.nextInt(3) match {

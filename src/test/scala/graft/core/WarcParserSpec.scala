@@ -6,11 +6,11 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Fixture-driven parser tests mirroring the reference's own suite
   * (tests/fastwarc/test_warc.py — iteration :25-60, offsets :145,
   * type filters :184, digests :296-366, clipped :600-620,
-  * clueweb quirks :830-858) over /root/reference/tests/data.
+  * clueweb quirks :830-858) over the fixture set in BenchCorpus.FixtureDir.
   */
 class WarcParserSpec extends AnyFunSuite {
 
-  private val DataDir = "/root/reference/tests/data"
+  private val DataDir = graft.sources.BenchCorpus.FixtureDir
 
   private def parse(file: String,
       opts: WarcParseOptions = WarcParseOptions()): Vector[WarcRecord] = {

@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ZstdSpec extends AnyFunSuite {
 
-  private val FixtureGz = "/root/reference/tests/data/warcfile.warc.gz"
+  private val FixtureGz = graft.sources.BenchCorpus.FixtureGz
 
   private def fixtureRecords(): Vector[WarcRecord] = {
     val in = new java.io.FileInputStream(FixtureGz)

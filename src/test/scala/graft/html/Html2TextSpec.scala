@@ -407,7 +407,7 @@ Some code
   test("real world data: extraction is non-empty and main-content is smaller") {
     import graft.core._
     val (in, _) = WarcCodecs.open(new java.io.FileInputStream(
-      "/root/reference/tests/data/warcfile.warc"))
+      graft.sources.BenchCorpus.FixtureRaw))
     val recs = try new WarcParser(new WarcByteReader(in), "w",
       WarcParseOptions(recordTypeMask = RecordType.Response)).toVector
       finally in.close()
@@ -445,7 +445,7 @@ Some code
     // the 16 real fixture pages
     import graft.core._
     val (in, _) = WarcCodecs.open(new java.io.FileInputStream(
-      "/root/reference/tests/data/warcfile.warc"))
+      graft.sources.BenchCorpus.FixtureRaw))
     val recs = try new WarcParser(new WarcByteReader(in), "w",
       WarcParseOptions(recordTypeMask = RecordType.Response)).toVector
       finally in.close()

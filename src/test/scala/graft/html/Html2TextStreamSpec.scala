@@ -45,7 +45,7 @@ class Html2TextStreamSpec extends AnyFunSuite {
 
   test("all fixture pages match the DOM path under all option sets") {
     val (in, _) = graft.core.WarcCodecs.open(new java.io.FileInputStream(
-      "/root/reference/tests/data/warcfile.warc"))
+      graft.sources.BenchCorpus.FixtureRaw))
     val parser = new graft.core.WarcParser(
       new graft.core.WarcByteReader(in), "")
     parser.filter(_.recordType == "response").zipWithIndex.foreach {

@@ -137,7 +137,7 @@ class HtmlQuirksSpec extends AnyFunSuite {
   // — random-mutation fuzz over the 16 real fixture pages —
 
   private lazy val fixturePages: Seq[Array[Byte]] = {
-    val in = new java.io.FileInputStream("/root/reference/tests/data/warcfile.warc")
+    val in = new java.io.FileInputStream(graft.sources.BenchCorpus.FixtureRaw)
     val parser = new graft.core.WarcParser(new graft.core.WarcByteReader(in),
       "warcfile.warc", graft.core.WarcParseOptions(parseHttp = true))
     try parser.collect {

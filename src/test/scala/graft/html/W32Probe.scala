@@ -7,7 +7,7 @@ object W32Probe {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    val rec = s.read.format("warc").load("/root/reference/tests/data/warcfile.warc.gz")
+    val rec = s.read.format("warc").load(graft.sources.BenchCorpus.FixtureGz)
       .select(col("record_date"), col("record_type"), col("content_length"))
     val w = graft.streaming.EventTime.windowedTypeCounts(rec)
       .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("ws"),

@@ -12,7 +12,7 @@ class WarcHtmlSpec extends AnyFunSuite {
 
   private def responses: Vector[WarcRecord] = {
     val (in, _) = WarcCodecs.open(
-      new FileInputStream("/root/reference/tests/data/warcfile.warc"))
+      new FileInputStream(graft.sources.BenchCorpus.FixtureRaw))
     try new WarcParser(new WarcByteReader(in), "warcfile",
       WarcParseOptions(recordTypeMask = RecordType.Response)).toVector
     finally in.close()

@@ -21,7 +21,7 @@ class ExtractExprsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
-  private val DataDir = "/root/reference/tests/data"
+  private val DataDir = graft.sources.BenchCorpus.FixtureDir
 
   test("expression output matches the kernel on real pages, incl. null charset") {
     val rows = spark.read.format("warc").load(s"$DataDir/warcfile.warc.gz")

@@ -21,7 +21,7 @@ class WarcHeaderGetSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
-  private val DataDir = "/root/reference/tests/data"
+  private val DataDir = graft.sources.BenchCorpus.FixtureDir
 
   test("last/first semantics match the HOF-composed lookups on real data") {
     import graft.functions.WarcCols

@@ -100,7 +100,7 @@ class WarcPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     val s = spark
     import s.implicits._
     val hits = s.read.format("warc")
-      .load("/root/reference/tests/data/warcfile.warc.gz")
+      .load(graft.sources.BenchCorpus.FixtureGz)
       .filter(col("record_type") === "response")
       .select(graft.functions.WarcCols.targetUri(col("headers")).as("url"),
         col("filename"), col("offset"))
@@ -131,7 +131,7 @@ class WarcPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("warc scan reports size statistics so a small archive side broadcasts") {
     import org.apache.spark.sql.functions._
     val warc = spark.read.format("warc")
-      .load("/root/reference/tests/data/warcfile.warc.gz")
+      .load(graft.sources.BenchCorpus.FixtureGz)
       .filter(col("record_type") === "response")
       .select(col("record_id"), col("content_length"))
     // a "big" relational side: join on a derived key; without
@@ -148,7 +148,7 @@ class WarcPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     def sizeOf(df: DataFrame): BigInt =
       df.queryExecution.optimizedPlan.stats.sizeInBytes
     val full = spark.read.format("warc")
-      .load("/root/reference/tests/data/warcfile.warc.gz")
+      .load(graft.sources.BenchCorpus.FixtureGz)
       .select(col("record_id"), col("content"))
     assert(sizeOf(full) > sizeOf(warc) * 5,
       s"payload-pruned scan should size far below full scan: " +

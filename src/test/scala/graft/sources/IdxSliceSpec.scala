@@ -19,7 +19,7 @@ import org.scalatest.BeforeAndAfterAll
   */
 class IdxSliceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private val DataDir = "/root/reference/tests/data"
+  private val DataDir = graft.sources.BenchCorpus.FixtureDir
   private var spark: SparkSession = _
   private val conf = new Configuration()
 

@@ -53,7 +53,7 @@ class LiveObjectStoreSpec extends AnyFunSuite {
     // stage the fixture archive at the remote prefix
     val remote = new org.apache.hadoop.fs.Path(base, "live.warc.gz")
     val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
-      "/root/reference/tests/data/warcfile.warc.gz"))
+      graft.sources.BenchCorpus.FixtureGz))
     val out = fs.create(remote, true)
     try out.write(bytes) finally out.close()
     try test(base)

@@ -10,7 +10,7 @@ import org.scalatest.BeforeAndAfterAll
   */
 class WarcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private val DataDir = "/root/reference/tests/data"
+  private val DataDir = graft.sources.BenchCorpus.FixtureDir
   private var spark: SparkSession = _
 
   override def beforeAll(): Unit = {
@@ -180,6 +180,29 @@ class WarcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(recs.flatten.exists(_.contains("truncated")))
   }
 
+  test("a missing path or an empty glob fails the batch scan with PATH_NOT_FOUND") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_missing")
+    try {
+      for (p <- Seq(s"$tmp/nonexistent", s"$tmp/*.warc.gz")) {
+        val e = intercept[org.apache.spark.sql.AnalysisException] {
+          spark.read.format("warc").load(p).count()
+        }
+        assert(e.getCondition == "PATH_NOT_FOUND", e.getMessage)
+        assert(e.getMessage.contains(p.stripPrefix("/")), e.getMessage)
+      }
+      // one missing path among existing ones still fails the whole scan
+      intercept[org.apache.spark.sql.AnalysisException] {
+        spark.read.format("warc").load(s"$DataDir/warcfile.warc", s"$tmp/nonexistent").count()
+      }
+    } finally java.nio.file.Files.delete(tmp)
+  }
+
+  test("an existing empty directory is an empty scan, not an error") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_empty")
+    try assert(spark.read.format("warc").load(tmp.toString).count() == 0L)
+    finally java.nio.file.Files.delete(tmp)
+  }
+
   test("mid-stream decompression corruption yields a terminal error row, not a task failure") {
     // damage the middle of the gzip and LZ4 fixtures: records before the
     // damage scan normally; the stream error becomes ONE error row.
@@ -190,8 +213,8 @@ class WarcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val tmp = java.nio.file.Files.createTempDirectory("graft_corrupt")
     val lz4Magic = Array[Byte](0x04, 0x22, 0x4d, 0x18)
     for ((src, name) <- Seq(
-        "/root/reference/tests/data/warcfile.warc.gz" -> "bad.warc.gz",
-        "/root/reference/tests/data/warcfile.warc.lz4" -> "bad.warc.lz4")) {
+        graft.sources.BenchCorpus.FixtureGz -> "bad.warc.gz",
+        graft.sources.BenchCorpus.FixtureLz4 -> "bad.warc.lz4")) {
       val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(src))
       if (name.endsWith(".lz4")) {
         // find a frame magic past the midpoint; clobber its first

@@ -12,7 +12,7 @@ import graft.core._
   */
 class WarcWriteSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private val DataDir = "/root/reference/tests/data"
+  private val DataDir = graft.sources.BenchCorpus.FixtureDir
   private var spark: SparkSession = _
 
   override def beforeAll(): Unit = {

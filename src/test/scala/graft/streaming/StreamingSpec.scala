@@ -24,7 +24,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("readStream format warc consumes newly landed archives per batch") {
     val landing = Files.createTempDirectory("warc-landing")
-    val src = Paths.get("/root/reference/tests/data/warcfile.warc.gz")
+    val src = Paths.get(graft.sources.BenchCorpus.FixtureGz)
     Files.copy(src, landing.resolve("batch-a.warc.gz"), StandardCopyOption.REPLACE_EXISTING)
 
     val stream = spark.readStream.format("warc").load(landing.toString)
@@ -51,6 +51,22 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       val types = spark.sql("SELECT record_type, n FROM warc_stream_counts").collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       assert(types("response") == 48L && types("request") == 51L)
+    } finally query.stop()
+  }
+
+  test("readStream on an empty landing directory starts and waits for archives") {
+    // unlike a batch scan (PATH_NOT_FOUND), an empty landing is a valid start
+    val landing = Files.createTempDirectory("warc-empty-landing")
+    val query = spark.readStream.format("warc").load(landing.toString)
+      .groupBy(col("record_type")).agg(count(lit(1)).as("n"))
+      .writeStream.format("memory").queryName("warc_empty_landing")
+      .outputMode("complete").start()
+    try {
+      query.processAllAvailable()
+      assert(query.exception.isEmpty)
+      Files.copy(Paths.get(graft.sources.BenchCorpus.FixtureGz), landing.resolve("a.warc.gz"))
+      query.processAllAvailable()
+      assert(spark.sql("SELECT sum(n) FROM warc_empty_landing").head.getLong(0) == 50L)
     } finally query.stop()
   }
 
@@ -103,7 +119,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // plain and trained-dict archives land in successive micro-batches
     val plain = {
       val out = new java.io.ByteArrayOutputStream()
-      val in = new java.io.FileInputStream("/root/reference/tests/data/warcfile.warc.gz")
+      val in = new java.io.FileInputStream(graft.sources.BenchCorpus.FixtureGz)
       try graft.core.WarcWriter.recompress(in, out, graft.core.WarcWriter.Zstd)
       finally in.close()
       out.toByteArray
@@ -118,7 +134,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(spark.sql("SELECT sum(n) FROM warc_zst_stream").head.getLong(0) == 50L)
       val dictOut = new java.io.ByteArrayOutputStream()
       graft.core.WarcWriter.recompressZstdTrained(
-        () => new java.io.FileInputStream("/root/reference/tests/data/warcfile.warc.gz"),
+        () => new java.io.FileInputStream(graft.sources.BenchCorpus.FixtureGz),
         dictOut)
       Files.write(landing.resolve("batch-b.warc.zst"), dictOut.toByteArray)
       query.processAllAvailable()
@@ -130,7 +146,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       "consumed archive (the backfill regime's free index)") {
     val landing = Files.createTempDirectory("warc-landing-emit")
     val idxDir = Files.createTempDirectory("warc-landing-emit-idx")
-    val src = Paths.get("/root/reference/tests/data/warcfile.warc.gz")
+    val src = Paths.get(graft.sources.BenchCorpus.FixtureGz)
     Files.copy(src, landing.resolve("a.warc.gz"), StandardCopyOption.REPLACE_EXISTING)
     val query = spark.readStream.format("warc")
       .option("emit_member_index", idxDir.toString)
@@ -155,7 +171,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("max_files_per_trigger bounds each micro-batch's admitted archives") {
     val landing = Files.createTempDirectory("warc-landing-mft")
-    val src = Paths.get("/root/reference/tests/data/warcfile.warc.gz")
+    val src = Paths.get(graft.sources.BenchCorpus.FixtureGz)
     // a 3-file backlog BEFORE the query starts — the restart-with-backlog
     // shape that must trickle, not land in one giant batch
     for (n <- Seq("a", "b", "c"))
@@ -185,7 +201,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // and lets Spark expire state past the watermark (bounded memory at
     // 100 TB ingest — an unbounded dropDuplicates would never GC)
     val landing = Files.createTempDirectory("warc-landing-dedup")
-    val src = Paths.get("/root/reference/tests/data/warcfile.warc.gz")
+    val src = Paths.get(graft.sources.BenchCorpus.FixtureGz)
     Files.copy(src, landing.resolve("crawl-a.warc.gz"), StandardCopyOption.REPLACE_EXISTING)
     val stream = spark.readStream.format("warc")
       .option("record_types", "response").load(landing.toString)
@@ -217,7 +233,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // Spark's unified API
     import graft.functions.{TextAnalysis, Web}
     val landing = Files.createTempDirectory("warc-landing-e2e")
-    val src = Paths.get("/root/reference/tests/data/warcfile.warc.gz")
+    val src = Paths.get(graft.sources.BenchCorpus.FixtureGz)
     Files.copy(src, landing.resolve("crawl-a.warc.gz"), StandardCopyOption.REPLACE_EXISTING)
     val pipeline = spark.readStream.format("warc")
       .option("record_types", "response").load(landing.toString)
@@ -253,7 +269,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // cutoff+files form) across a query restart
     val landing = Files.createTempDirectory("warc-landing-ckpt")
     val ckpt = Files.createTempDirectory("warc-ckpt")
-    val src = Paths.get("/root/reference/tests/data/warcfile.warc.gz")
+    val src = Paths.get(graft.sources.BenchCorpus.FixtureGz)
     Files.copy(src, landing.resolve("one.warc.gz"), StandardCopyOption.REPLACE_EXISTING)
     def start() = spark.readStream.format("warc").load(landing.toString)
       .groupBy(col("record_type")).agg(count(lit(1)).as("n"))
@@ -275,7 +291,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("windowed type counts with watermark run on the streaming source") {
     val landing = Files.createTempDirectory("warc-landing2")
-    Files.copy(Paths.get("/root/reference/tests/data/warcfile.warc.gz"),
+    Files.copy(Paths.get(graft.sources.BenchCorpus.FixtureGz),
       landing.resolve("a.warc.gz"), StandardCopyOption.REPLACE_EXISTING)
     val stream = spark.readStream.format("warc").load(landing.toString)
     val query = EventTime.startToMemory(stream, "warc_windowed")
@@ -291,7 +307,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("event-time transforms give identical results on batch frames") {
     val batch = spark.read.format("warc")
-      .load("/root/reference/tests/data/warcfile.warc.gz")
+      .load(graft.sources.BenchCorpus.FixtureGz)
     val counts = EventTime.windowedTypeCounts(batch, "1 hour")
       .orderBy(col("window.start"), col("record_type"))
       .collect()
@@ -302,7 +318,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("per-host stateful progress on batch frames") {
     val batch = spark.read.format("warc")
-      .load("/root/reference/tests/data/warcfile.warc")
+      .load(graft.sources.BenchCorpus.FixtureRaw)
       .filter(col("record_type") === "response")
     val hosts = EventTime.hostProgress(batch).collect()
     assert(hosts.nonEmpty)
@@ -495,7 +511,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       "batches, terminates, and a later run resumes from the checkpoint") {
     val landing = Files.createTempDirectory("avnow-landing")
     val ckpt = Files.createTempDirectory("avnow-ckpt").toString
-    val src = Paths.get("/root/reference/tests/data/warcfile.warc.gz")
+    val src = Paths.get(graft.sources.BenchCorpus.FixtureGz)
     (1 to 3).foreach(i =>
       Files.copy(src, landing.resolve(s"drop-$i.warc.gz")))
     val batchSizes = collection.mutable.ArrayBuffer.empty[Long]
@@ -578,7 +594,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val out = Files.createTempDirectory("eo-warc-replay").toString
     val writer = ExactlyOnce.warcBatchWriter(out, Map("checksum" -> "true"))
     val batch0 = spark.read.format("warc")
-      .load("/root/reference/tests/data/warcfile.warc.gz")
+      .load(graft.sources.BenchCorpus.FixtureGz)
       .filter(col("record_type") === "response")
       .select(col("record_id"), col("record_type"), col("record_date"),
         col("headers"), col("content"))
@@ -606,7 +622,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val landing = Files.createTempDirectory("eo-warc-landing")
     val ckpt = Files.createTempDirectory("eo-warc-ckpt").toString
     val out = Files.createTempDirectory("eo-warc-out").toString
-    val src = Paths.get("/root/reference/tests/data/warcfile.warc.gz")
+    val src = Paths.get(graft.sources.BenchCorpus.FixtureGz)
     def start() = spark.readStream.format("warc")
       .option("record_types", "response").load(landing.toString)
       .select(col("record_id"), col("record_type"), col("record_date"),

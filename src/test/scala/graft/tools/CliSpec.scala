@@ -10,8 +10,8 @@ import java.io.{ByteArrayOutputStream, PrintStream}
   */
 class CliSpec extends AnyFunSuite {
 
-  private val Fixture = "/root/reference/tests/data/warcfile.warc"
-  private val FixtureGz = "/root/reference/tests/data/warcfile.warc.gz"
+  private val Fixture = graft.sources.BenchCorpus.FixtureRaw
+  private val FixtureGz = graft.sources.BenchCorpus.FixtureGz
 
   private def run(args: String*): (Int, String) = {
     val bos = new ByteArrayOutputStream()

@@ -10,8 +10,7 @@ import java.io.FileInputStream
   */
 object EncodingAudit {
   def main(args: Array[String]): Unit = {
-    val path = if (args.nonEmpty) args(0)
-      else "/root/reference/tests/data/warcfile.warc"
+    val path = args.headOption.getOrElse(graft.sources.BenchCorpus.FixtureRaw)
     val in = new FileInputStream(path)
     val parser = new WarcParser(new WarcByteReader(in), path,
       WarcParseOptions(parseHttp = true))
