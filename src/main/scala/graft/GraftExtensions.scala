@@ -3,9 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.plans.WarcHeaderGet
+import graft.plans.{KernelOnce, WarcHeaderGet}
 
 /** SQL-surface registration (`spark.sql.extensions=graft.GraftExtensions`):
   * exposes the engine's kernels to plain SQL, so a pure-SQL user can run
@@ -20,6 +22,10 @@ import graft.plans.WarcHeaderGet
   *    through [[org.apache.spark.sql.GraftColumnBridge]], so SQL gets
   *    the exact expression tree (and codegen behavior) the DataFrame
   *    API builds.
+  *
+  * It also registers the physical rule [[graft.plans.KernelOnce]], which
+  * evaluates each costly kernel once per row even where predicate
+  * pushdown copied it into a Filter.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -42,6 +48,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     import graft.functions.TextAnalysis
+    ext.injectColumnar(_ => new ColumnarRule {
+      override def preColumnarTransitions: Rule[SparkPlan] = KernelOnce
+    })
     def inject(name: String)(builder: Seq[Expression] => Expression): Unit =
       ext.injectFunction((
         FunctionIdentifier(name),

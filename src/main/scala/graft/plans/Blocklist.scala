@@ -211,7 +211,7 @@ object AhoCorasick {
   * the per-document gate projection.
   */
 case class BlocklistCountsExpr(child: Expression, patterns: Seq[String])
-    extends UnaryExpression {
+    extends UnaryExpression with CostlyKernel {
 
   @transient private lazy val automaton = new AhoCorasick(patterns.toArray)
 

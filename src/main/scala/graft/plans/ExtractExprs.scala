@@ -66,7 +66,7 @@ object ExtractKernels {
   * eval/doGenCode wholesale instead of using nullSafeEval.
   */
 case class ExtractPlainTextExpr(body: Expression, charset: Expression,
-    mainContent: Boolean, maxNodes: Int) extends Expression {
+    mainContent: Boolean, maxNodes: Int) extends Expression with CostlyKernel {
 
   override def children: Seq[Expression] = Seq(body, charset)
   override def dataType: DataType = StringType
@@ -118,7 +118,7 @@ case class ExtractPlainTextExpr(body: Expression, charset: Expression,
   * had (the compiled vectorizer kernel is the cost; this removes the
   * per-row closure + struct encoder overhead around it).
   */
-case class DetectLangExpr(child: Expression) extends UnaryExpression {
+case class DetectLangExpr(child: Expression) extends UnaryExpression with CostlyKernel {
 
   override def dataType: DataType = StructType(Seq(
     StructField("lang", StringType, nullable = false),

@@ -33,7 +33,7 @@ object TextNormalizeKernels {
   * A UDF here would put a closure-dispatch island in the middle of the
   * per-document cleaning projection; this stays in the codegen span.
   */
-case class NfcNormalizeExpr(child: Expression) extends UnaryExpression {
+case class NfcNormalizeExpr(child: Expression) extends UnaryExpression with CostlyKernel {
 
   override def dataType: DataType = StringType
   override def prettyName: String = "nfc_normalize"

@@ -102,10 +102,12 @@ object Warc {
     *
     * Plan shape: ONE collapsed projection evaluates the extraction kernel
     * once; `nullif(text, '')` folds the old `text IS NOT NULL AND
-    * length(text) > 0` filter into the content column (null = drop), so no
-    * Filter ever references the extraction output — Catalyst would push it
-    * below the projection and run decode->parse->extract twice per page.
-    * The sink's `drop_null_content` option drops those rows at write time.
+    * length(text) > 0` filter into the content column (null = drop), and
+    * the sink's `drop_null_content` option drops those rows at write time.
+    * A filter on `text` would be pushed below the projection; with
+    * `graft.GraftExtensions` registered, [[graft.plans.KernelOnce]] still
+    * evaluates the kernel once, but this shape is kept because the oracle
+    * pins it and it evaluates once in a session without the extension too.
     */
   def wetExportFrame(s: SparkSession): DataFrame =
     wetRows(scan(s, "warcfile.warc.gz").filter(col("record_type") === "response"))
@@ -1594,10 +1596,10 @@ object Warc {
         .write.format("warc").option("checksum", "true")
         // the write-path null gate: rows whose extraction came back
         // null/empty carry a null content column and are dropped by the
-        // sink — NOT by a filter on `text`, which Catalyst would push
-        // below the extraction projection and evaluate the full
-        // decode->parse->extract kernel twice per page (the w29 bug
-        // class, round-9 audit; WarcPlanSpec pins one evaluation site)
+        // sink, not by a filter on `text` — that filter would be pushed
+        // below the extraction projection, and only KernelOnce (with the
+        // extension registered) keeps it to one kernel evaluation per
+        // page; WarcPlanSpec pins one evaluation site without it
         .option("drop_null_content", "true")
         .mode("append").save(out)
       val wet = s.read.format("warc").load(out)
@@ -1689,8 +1691,8 @@ object Warc {
     // gate is token count only and the output tracks language DIVERSITY
     // of the surviving set rather than filtering to one language.
     // The CLEANING funnel — w29's sibling for the gate side of corpus
-    // prep: ONE extraction pass (same no-filter-between-projections
-    // doctrine, or the kernel runs twice), then per-page length gate +
+    // prep: ONE extraction pass (no filter between the projections, so
+    // it runs once with or without KernelOnce), then per-page length gate +
     // Aho-Corasick blocklist counts IN the same codegen span, dedup by
     // content fingerprint, and the per-stage attrition counts a data
     // curator actually reads: pages -> unique docs -> long enough ->
@@ -1708,7 +1710,8 @@ object Warc {
       // the counts array materializes under an alias in its own select
       // (the t33 pattern): CollapseProject declines to inline a
       // non-cheap expression referenced 3x, so the automaton walks each
-      // page ONCE (w31's single-kernel-evaluation doctrine)
+      // page ONCE (KernelOnce hoists kernels out of Filters only;
+      // projections keep them single by this shape)
       val perPage = s.read.format("warc")
         .option("record_types", "response")
         .load(dir)
@@ -1736,13 +1739,13 @@ object Warc {
       val dir = graft.sources.BenchCorpus.ensure(
         s"${System.getProperty("java.io.tmpdir")}/graft_warc_bench",
         files = 32, copiesPerFile = 50)
-      // NO filter between the extraction projection and the downstream
-      // select: a `text IS NOT NULL` filter here gets predicate-pushed
-      // below the projection, and with no cross-operator subexpression
-      // elimination the full decode->parse->extract kernel runs TWICE
-      // per page (round-8 plan audit). Null texts (mem-guard breach
-      // only) instead flow to a null-fp group that the final aggregate
-      // gates out.
+      // No filter between the extraction projection and the downstream
+      // select: a `text IS NOT NULL` filter here would be pushed below
+      // the projection, and only graft.plans.KernelOnce (registered by
+      // GraftExtensions) would then keep decode->parse->extract to one
+      // evaluation per page; this shape runs it once without the
+      // extension too. Null texts (mem-guard breach only) instead flow
+      // to a null-fp group that the final aggregate gates out.
       val perPage = s.read.format("warc")
         .option("record_types", "response")
         .load(dir)

@@ -1827,8 +1827,8 @@ class WarcDataWriter(dir: String, codecName: String, checksum: Boolean,
     // This is the write-path null gate that lets callers express
     // "keep rows whose derived payload is non-null" WITHOUT a Filter on
     // the derived column — such a filter predicate-pushes below the
-    // projection and, absent cross-operator subexpression elimination,
-    // re-evaluates the (possibly very expensive) deriving kernel per row.
+    // projection and, in a session without graft.plans.KernelOnce (the
+    // GraftExtensions rule), re-evaluates the deriving kernel per row.
     if (dropNullContent && idx.get("content").exists(row.isNullAt)) return
     val content: Array[Byte] = idx.get("content").filter(!row.isNullAt(_))
       .map(row.getBinary).getOrElse(Array.emptyByteArray)

@@ -6,15 +6,16 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan pins for the extraction kernel across ALL queries.
   *
-  * These guard plan SHAPE, not results: the round-8 audit found w29's
-  * `text IS NOT NULL` filter predicate-pushed below the extraction
-  * projection, so the full decode->parse->extract kernel ran twice per
-  * page (Catalyst has no cross-operator subexpression elimination); the
-  * round-9 audit found the same shape had survived in w31. Instead of
-  * naming queries, this spec now iterates every `SparkEntry.queries`
-  * entry, builds its physical plan, and asserts the invariant for any
-  * plan that contains the kernel — a future query that reintroduces the
-  * filter-after-extraction shape fails here automatically.
+  * These guard plan SHAPE, not results. A filter on the extracted text is
+  * predicate-pushed below the extraction projection, and Catalyst has no
+  * cross-operator subexpression elimination, so without
+  * [[graft.plans.KernelOnce]] (registered by `graft.GraftExtensions`; see
+  * `KernelOnceSpec`) decode->parse->extract runs once per Filter
+  * reference plus once in the projection. The in-repo queries must also
+  * run in a session without the extension, so this spec's session does
+  * not register it: it iterates every `SparkEntry.queries` entry, builds
+  * its physical plan, and asserts one evaluation site for any plan that
+  * contains the kernel — a query that filters after extraction fails here.
   *
   * w31 writes its frame eagerly and returns an aggregate over the
   * read-back output, so its extraction plan is not visible through the

@@ -40,9 +40,13 @@ import io
 import json
 import os
 import sys
+import tempfile
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 REPO = os.path.dirname(HERE)
+# where graft.sources.BenchCorpus.FixtureDir builds the plain fixture
+# (java.io.tmpdir/graft_fixtures)
+FIXTURE_WARC = os.path.join(tempfile.gettempdir(), "graft_fixtures", "warcfile.warc")
 PINNED = [
     "w09_warc_mime", "w10_warc_encodings", "w11_warc_decoded_text",
     "w16_warc_langs", "w19_html_extract10k", "w29_training_pipeline",
@@ -279,13 +283,18 @@ def main():
     fv.add_argument("out_dir", help="graft.Verify output directory")
     rf = sub.add_parser("reference",
                         help="derive pins from fastwarc/resiliparse")
-    rf.add_argument("--warc",
-                    default="/root/reference/tests/data/warcfile.warc")
+    rf.add_argument("--warc", default=FIXTURE_WARC,
+                    help="plain fixture archive (default: %(default)s)")
     rf.add_argument("--docs",
                     default="/root/testdata/sf0.01/documents.parquet")
     args = ap.parse_args()
     if args.mode == "from-verify":
         sys.exit(from_verify(args.out_dir))
+    if not os.path.exists(args.warc):
+        sys.exit(f"{args.warc} not found. graft.sources.BenchCorpus.FixtureDir "
+                 "builds it on first use from the in-repo warcfile.warc.br; "
+                 "run any spec that touches FixtureDir, e.g. "
+                 "sbt \"testOnly graft.sources.FixtureSetSpec\", or pass --warc PATH")
     sys.exit(reference_mode(args.warc, args.docs))
 
 
