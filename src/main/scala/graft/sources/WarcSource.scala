@@ -24,8 +24,11 @@ import graft.core._
   * (resiliparse-py/resiliparse/beam/warcio.py:43-98).
   *
   * Scale design (the part that matters at 100 TB):
-  *  - one `InputPartition` per file for compressed archives (gzip/LZ4 are
-  *    forward-only streams — the same constraint the Beam source has);
+  *  - a compressed archive is read whole by one task (gzip/LZ4 are
+  *    forward-only streams — the same constraint the Beam source has),
+  *    and small whole files are packed several to a task, Spark's
+  *    file-source rule (`WarcPlanner.pack`), the way Beam bundles many
+  *    small archives into one worker's work;
   *  - UNcompressed archives larger than `maxPartitionBytes` are split into
   *    byte ranges with resync-to-next-version-line semantics (the Beam
   *    restriction-tracker analog, warcio.py:101-109): a record belongs to
@@ -49,7 +52,8 @@ import graft.core._
   *   parse_http            default true (auto-disabled by column pruning)
   *   strict                require WARC/1.x version lines
   *   split_uncompressed    default true
-  *   max_partition_bytes   split size for uncompressed files (default 128 MiB)
+  *   max_partition_bytes   split size for uncompressed files and the cap
+  *                         on a packed bin of small files (default 128 MiB)
   *
   * Beyond the reference's kwargs (this engine's scale surface):
   *   member_index          CDXJ / .idx file, glob or dir: member-parallel
@@ -245,6 +249,15 @@ object WarcInput {
     !(n.endsWith(".gz") || n.endsWith(".gzip") || n.endsWith(".lz4") ||
       n.endsWith(".zst") || n.endsWith(".bz2") || n.endsWith(".br"))
   }
+
+  /** Decoded-size estimate of an archive from its name and on-disk length:
+    * compressed archives count ~4× their bytes (text-dominant WARC
+    * payloads), uncompressed ones count as they are. Deliberately coarse;
+    * the scan's size statistics and the planner's packing weight both
+    * use it.
+    */
+  def decodedBytes(name: String, len: Long): Long =
+    if (looksUncompressed(name)) len else len * 4
 
   /** Parse one member-index file — JSON-lines `.idx`
     * (`{"filename":…,"offset":…}` as the WARC sink, MemberIndex pass,
@@ -596,6 +609,22 @@ case class WarcInputPartition(
 case class IdxSlice(idxPath: String, byteStart: Long, byteEnd: Long,
     planLen: Long = -1L)
 
+/** Several small whole-file partitions read by ONE task, one file after
+  * the other (the planner's packed bin, see `WarcPlanner.pack`). Each
+  * file keeps its own `WarcPartitionReader`, so every per-file contract
+  * (error rows, stream-death check, retries, member-index side-output)
+  * holds unchanged inside the bin.
+  */
+case class WarcFilesPartition(files: Seq[WarcInputPartition]) extends InputPartition
+
+object WarcFilesPartition {
+  /** The per-file partitions a planned partition covers. */
+  def unpack(p: InputPartition): Seq[WarcInputPartition] = p match {
+    case w: WarcInputPartition => Seq(w)
+    case b: WarcFilesPartition => b.files
+  }
+}
+
 class WarcScan(
     options: CaseInsensitiveStringMap,
     filters: Array[Filter],
@@ -608,12 +637,12 @@ class WarcScan(
     * one-file archive can never choose broadcast — at 100 TB the common
     * "enrich corpus with a small curated WARC set" join degrades to a
     * full shuffle of the corpus. The estimate is deliberately coarse
-    * (a hint gates broadcast at ~10 MB; being 2× off is harmless):
-    * compressed archives count ~4× their on-disk bytes (text-dominant
-    * WARC payloads), and an envelope-only scan (payload pruned away)
-    * counts ~1/10 of the decompressed stream — headers are a sliver of
-    * a crawl archive's bytes. numRows stays unknown: record sizes vary
-    * by orders of magnitude and a bad row estimate is worse than none.
+    * (a hint gates broadcast at ~10 MB; being 2× off is harmless): each
+    * archive counts its decoded-size estimate (`WarcInput.decodedBytes`),
+    * and an envelope-only scan (payload pruned away) counts ~1/10 of it —
+    * headers are a sliver of a crawl archive's bytes. numRows stays
+    * unknown: record sizes vary by orders of magnitude and a bad row
+    * estimate is worse than none.
     */
   // the planner may ask for statistics several times per query; the
   // file listing is a driver-side FS round-trip (expensive on object
@@ -625,10 +654,8 @@ class WarcScan(
     WarcInput.listFiles(WarcInput.paths(options), conf)
       .filter(st => WarcInput.isDataFile(st.getPath.getName))
       .map { st =>
-        val raw = st.getLen
-        val decompressed =
-          if (WarcInput.looksUncompressed(st.getPath.getName)) raw else raw * 4
-        if (o.readPayload) decompressed else math.max(decompressed / 10, 1L)
+        val decoded = WarcInput.decodedBytes(st.getPath.getName, st.getLen)
+        if (o.readPayload) decoded else math.max(decoded / 10, 1L)
       }.sum
   }
 
@@ -649,7 +676,7 @@ class WarcScan(
   override def supportedCustomMetrics()
       : Array[org.apache.spark.sql.connector.metric.CustomMetric] = Array(
     new WarcScanMetrics.Records, new WarcScanMetrics.ErrorRows,
-    new WarcScanMetrics.ContentBytes)
+    new WarcScanMetrics.ContentBytes, new WarcScanMetrics.Files)
   override def description(): String = {
     val o = parseOpts
     val eff = Seq(
@@ -666,7 +693,7 @@ class WarcScan(
     val conf = WarcInput.withHttpFs(
       org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
     val files = WarcInput.listBatchFiles(WarcInput.paths(options), conf)
-    WarcPlanner.plan(files, options, conf)
+    WarcPlanner.plan(files, options, conf, WarcPlanner.sessionPacking())
   }
 
   /** Ship only filesystem-relevant hadoop conf entries (serializable,
@@ -708,17 +735,33 @@ class WarcScan(
     new WarcMicroBatchStream(options, parseOpts, required, fsProps)
 }
 
-/** The per-file partition planner, shared by the batch scan and the
-  * micro-batch stream (a streaming BACKFILL of large indexed archives
-  * wants the same member-parallel splits a batch scan gets — one
-  * whole-file partition per 100 GB archive per trigger would serialize
-  * the backfill on single executors). Plan-time driver work is
-  * O(files + partitions): sidecars are never read here (IdxSlice),
-  * and existence probes batch per parent directory.
+/** The partition planner, shared by the batch scan and the micro-batch
+  * stream (a streaming BACKFILL of large indexed archives wants the same
+  * member-parallel splits a batch scan gets — one whole-file partition
+  * per 100 GB archive per trigger would serialize the backfill on single
+  * executors). Each file is planned on its own first (member-index
+  * slices, raw byte ranges, or the whole file); the whole-file
+  * partitions are then packed into slot-sized bins ([[pack]]). Plan-time
+  * driver work is O(files + partitions): sidecars are never read here
+  * (IdxSlice), and existence probes batch per parent directory.
   */
 private[sources] object WarcPlanner {
+  /** The session settings Spark's own file sources pack by
+    * (`spark.sql.files.openCostInBytes`; `spark.sql.files.minPartitionNum`,
+    * else the leaf-node default parallelism). */
+  final case class Packing(openCost: Long, minPartitionNum: Int)
+
+  def sessionPacking(): Packing = {
+    val session = org.apache.spark.sql.SparkSession.active
+    val sql = session.sessionState.conf
+    val minParts = sql.filesMinPartitionNum.getOrElse(
+      sql.getConf(org.apache.spark.sql.internal.SQLConf.LEAF_NODE_DEFAULT_PARALLELISM)
+        .getOrElse(session.sparkContext.defaultParallelism))
+    Packing(sql.filesOpenCostInBytes, minParts)
+  }
+
   def plan(files: Seq[FileStatus], options: CaseInsensitiveStringMap,
-      conf: Configuration): Array[InputPartition] = {
+      conf: Configuration, packing: Packing): Array[InputPartition] = {
     val split = options.getBoolean("split_uncompressed", true)
     val maxPart = options.getLong("max_partition_bytes", 128L * 1024 * 1024)
     // member index: JSON-lines {"filename": ..., "offset": <compressed>}
@@ -851,7 +894,7 @@ private[sources] object WarcPlanner {
       listedSidecars.get(idxPath).orElse(probedSidecars.get(idxPath))
     }
 
-    files.filter(st => WarcInput.isDataFile(st.getPath.getName)).flatMap { st =>
+    val perFile = files.filter(st => WarcInput.isDataFile(st.getPath.getName)).flatMap { st =>
       val p = st.getPath.toString
       val len = st.getLen
       val indexed = memberIndex.get(st.getPath.getName)
@@ -915,7 +958,46 @@ private[sources] object WarcPlanner {
         (0L until len by maxPart).map(s =>
           WarcInputPartition(p, s, math.min(s + maxPart, len), len))
       } else Seq(WarcInputPartition(p, 0L, Long.MaxValue, len))
-    }.toArray
+    }
+    val (whole, sliced) = perFile.partition(p =>
+      p.start == 0L && p.end == Long.MaxValue && p.memberOffsets.isEmpty && p.idx.isEmpty)
+    (sliced ++ pack(whole, maxPart, packing)).toArray
+  }
+
+  /** Whole-file partitions packed into slot-sized bins — Spark's own
+    * file-source rule (`FilePartition.maxSplitBytes` + next-fit
+    * decreasing), so a scan of many small archives runs about one task
+    * per slot instead of one per archive: fewer task launches, reader
+    * and codec buffers, and shuffle files (map tasks × reduce
+    * partitions). A file weighs its decoded-size estimate plus
+    * `openCost`; the bin size is
+    * `min(max_partition_bytes, max(openCost, totalWeight / minPartitionNum))`.
+    * Files go in by descending weight, ties by path, so a plan is
+    * deterministic. A bin of one file stays a plain `WarcInputPartition`.
+    */
+  private[sources] def pack(whole: Seq[WarcInputPartition], maxPart: Long,
+      packing: Packing): Seq[InputPartition] = {
+    val weighted = whole.map(p => p -> WarcInput.decodedBytes(p.path, p.fileSize))
+      .sortBy { case (p, w) => (-w, p.path) }
+    val total = weighted.map(_._2 + packing.openCost).sum
+    val maxSplit = math.min(maxPart,
+      math.max(packing.openCost, total / math.max(1, packing.minPartitionNum)))
+    val bins = Vector.newBuilder[InputPartition]
+    var bin = Vector.empty[WarcInputPartition]
+    var binBytes = 0L
+    def closeBin(): Unit = {
+      if (bin.size == 1) bins += bin.head
+      else if (bin.nonEmpty) bins += WarcFilesPartition(bin)
+      bin = Vector.empty
+      binBytes = 0L
+    }
+    weighted.foreach { case (p, w) =>
+      if (binBytes + w > maxSplit) closeBin()
+      bin :+= p
+      binBytes += w + packing.openCost
+    }
+    closeBin()
+    bins.result()
   }
 }
 
@@ -927,13 +1009,62 @@ class WarcReaderFactory(
     streamRetries: Int = 0,
     emitIdxDir: Option[String] = None,
     asyncDecode: Boolean = false) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[WarcInputPartition]
-    val conf = new Configuration()
-    fsProps.foreach { case (k, v) => conf.set(k, v) }
-    new WarcPartitionReader(p, parseOpts, required, WarcInput.withHttpFs(conf),
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    partition match {
+      case b: WarcFilesPartition => new WarcFilesReader(b.files, fileReader)
+      case p: WarcInputPartition => fileReader(p)
+    }
+
+  private def fileReader(p: WarcInputPartition): WarcPartitionReader =
+    new WarcPartitionReader(p, parseOpts, required, WarcInput.cachedConf(fsProps),
       streamRetries, emitIdxDir, asyncDecode)
+}
+
+/** Reads a packed bin: the files' own readers run one after the other,
+  * each closed (committing its member-index sidecar after a clean EOF)
+  * before the next opens; task metrics are the sum over the files. An
+  * early close (LIMIT, kill) closes the live file's reader only — files
+  * never reached are never opened.
+  */
+class WarcFilesReader(files: Seq[WarcInputPartition],
+    open: WarcInputPartition => WarcPartitionReader)
+    extends PartitionReader[InternalRow] {
+  private var nextFile = 0
+  private var cur: WarcPartitionReader = _
+  // metric values of the files already closed, in WarcScanMetrics.Names order
+  private val closedTotals = new Array[Long](WarcScanMetrics.Names.length)
+
+  private def addInto(sums: Array[Long], r: WarcPartitionReader): Unit = {
+    val v = r.metricValues
+    v.indices.foreach(i => sums(i) += v(i))
   }
+
+  override def next(): Boolean = {
+    while (cur == null || !cur.next()) {
+      if (cur != null) {
+        val done = cur
+        cur = null
+        addInto(closedTotals, done)
+        done.close()
+      }
+      if (nextFile >= files.length) return false
+      cur = open(files(nextFile))
+      nextFile += 1
+    }
+    true
+  }
+
+  override def get(): InternalRow = cur.get()
+
+  override def currentMetricsValues()
+      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] = {
+    val sums = closedTotals.clone()
+    if (cur != null) addInto(sums, cur)
+    WarcScanMetrics.tasks(sums)
+  }
+
+  override def close(): Unit =
+    if (cur != null) { val r = cur; cur = null; r.close() }
 }
 
 object WarcScanMetrics {
@@ -949,12 +1080,18 @@ object WarcScanMetrics {
   final class Records extends Sum("warcRecords", "WARC records emitted")
   final class ErrorRows extends Sum("warcErrorRows", "WARC records with error set")
   final class ContentBytes extends Sum("warcContentBytes", "WARC content bytes materialized")
+  final class Files extends Sum("warcFiles", "WARC archives opened")
   final class RecordsWritten extends Sum("warcRecordsWritten", "WARC records written")
   case class Task(n: String, v: Long)
       extends org.apache.spark.sql.connector.metric.CustomTaskMetric {
     override def name(): String = n
     override def value(): Long = v
   }
+
+  /** The scan metrics a reader reports, in the order of its values. */
+  val Names: Array[String] = Array("warcRecords", "warcErrorRows", "warcContentBytes", "warcFiles")
+  def tasks(values: Array[Long]): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    Names.indices.map(i => Task(Names(i), values(i))).toArray
 }
 
 object WarcPartitionReader {
@@ -975,11 +1112,11 @@ class WarcPartitionReader(
   private var mRecords = 0L
   private var mErrors = 0L
   private var mBytes = 0L
+  /** Values of `WarcScanMetrics.Names`; a file reader opens one archive. */
+  def metricValues: Array[Long] = Array(mRecords, mErrors, mBytes, 1L)
   override def currentMetricsValues()
-      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] = Array(
-    WarcScanMetrics.Task("warcRecords", mRecords),
-    WarcScanMetrics.Task("warcErrorRows", mErrors),
-    WarcScanMetrics.Task("warcContentBytes", mBytes))
+      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    WarcScanMetrics.tasks(metricValues)
 
   private val hPath = new Path(part.path)
   private val fs: FileSystem = hPath.getFileSystem(conf)
@@ -1942,11 +2079,7 @@ class WarcMicroBatchStream(
     }
   }
 
-  private def conf: Configuration = {
-    val c = new Configuration()
-    fsProps.foreach { case (k, v) => c.set(k, v) }
-    WarcInput.withHttpFs(c)
-  }
+  private def conf: Configuration = WarcInput.cachedConf(fsProps)
 
   private def listSorted(): Seq[FileStatus] =
     WarcInput.listFiles(WarcInput.paths(options), conf)
@@ -2086,15 +2219,15 @@ class WarcMicroBatchStream(
     // a column whose documented semantics are "best seekable address
     // known at scan time" — the honest contract is documented instead:
     // treat `offset` as an opaque address, not a replay-stable key.
-    WarcPlanner.plan(admitted, options, conf)
+    WarcPlanner.plan(admitted, options, conf, WarcPlanner.sessionPacking())
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
     new WarcReaderFactory(parseOpts, required, fsProps,
       options.getInt("stream_retries", 0),
       // a streaming backfill benefits from the side-output the same way
-      // a batch first scan does: each micro-batch partition is a whole
-      // file, so the emit conditions (start=0, clean EOF) apply as-is
+      // a batch first scan does: every whole-file scan (alone or inside
+      // a packed bin) meets the emit conditions (start=0, clean EOF)
       Option(options.get("emit_member_index")))
 }
 

@@ -45,7 +45,8 @@ import org.apache.spark.sql.functions._
   *    graphs scaled ×k in disjoint id ranges; asserts component count
   *    scales exactly ×k at constant component size.
   *  - `scan`: the pure batch envelope scan over the same corpora —
-  *    parallelism = files, no shuffle; asserts record counts ×k.
+  *    one task per file or per packed bin of files, no shuffle; asserts
+  *    record counts ×k.
   *  - `stream`: the streaming WARC scan under Trigger.AvailableNow with
   *    16-files-per-trigger admission — k× corpus ⇒ k× constant-size
   *    micro-batches (the 100 TB backfill regime); asserts record counts
@@ -678,10 +679,11 @@ object ScaleCheck {
           spark.read.format("warc").option("record_types", "response")
             .option("emit_member_index", dirP).load(dirP).count()
         import org.apache.spark.sql.util.CaseInsensitiveStringMap
-        def planOf(opts: Map[String, String]): Array[_] = {
+        import org.apache.spark.sql.connector.read.InputPartition
+        def planOf(opts: Map[String, String]): Array[InputPartition] = {
           val m = new java.util.HashMap[String, String]()
-          opts.foreach { case (k, v) => m.put(k, v) }
           m.put("max_partition_bytes", (64 * 1024).toString)
+          opts.foreach { case (k, v) => m.put(k, v) }
           new graft.sources.WarcScanBuilder(new CaseInsensitiveStringMap(m))
             .build().toBatch.planInputPartitions()
         }
@@ -689,7 +691,7 @@ object ScaleCheck {
           System.gc(); Thread.sleep(50); System.gc()
           Runtime.getRuntime.totalMemory() - Runtime.getRuntime.freeMemory()
         }
-        def timedPlan(opts: Map[String, String]): (Array[_], Double) = {
+        def timedPlan(opts: Map[String, String]): (Array[InputPartition], Double) = {
           val t0 = System.nanoTime()
           val p = planOf(opts)
           (p, (System.nanoTime() - t0) / 1e9)
@@ -700,10 +702,10 @@ object ScaleCheck {
         val (partsDir, tDir) = timedPlan(Map("path" -> dirP))
         val hDir = usedHeap() - h0
         // data-file partitions only (the dir listing also plans the
-        // zero-byte READY marker)
-        val slices = partsDir.collect {
-          case p: graft.sources.WarcInputPartition
-            if p.path.endsWith(".warc.gz") => p }
+        // zero-byte READY marker); packed bins count per file
+        def perFile(a: Array[InputPartition]): Seq[graft.sources.WarcInputPartition] =
+          a.toSeq.flatMap(graft.sources.WarcFilesPartition.unpack)
+        val slices = perFile(partsDir).filter(_.path.endsWith(".warc.gz"))
         require(slices.nonEmpty)
         require(slices.forall(p => p.memberOffsets.isEmpty && p.idx.isDefined),
           "plan embedded member offsets — the O(corpus) driver term is back")
@@ -716,6 +718,28 @@ object ScaleCheck {
           f"task-payload=$bytesPerPart%6.0f B/part")
         require(tDir < 1.0, f"1k-file plan took $tDir%.2f s (budget 1 s)")
         require(bytesPerPart < 1024, f"task payload $bytesPerPart%.0f B/part")
+        // (a') packed: the same 1,000 files at the default 128 MiB cap
+        // plan whole-file and pack into slot-sized bins; a bin holds at
+        // most ~max_partition_bytes / openCost (32) files, and its task
+        // payload is that many file partitions
+        val (partsPacked, tPacked) =
+          timedPlan(Map("path" -> dirP, "max_partition_bytes" -> (128L << 20).toString))
+        val packed = partsPacked.collect { case b: graft.sources.WarcFilesPartition => b }
+        require(packed.nonEmpty &&
+          perFile(partsPacked).size == perFile(partsDir).map(_.path).distinct.size,
+          s"packed plan lost files: ${perFile(partsPacked).size} planned")
+        val binBytes = packed.map { b =>
+          val bb = new java.io.ByteArrayOutputStream()
+          val ob = new java.io.ObjectOutputStream(bb)
+          ob.writeObject(b); ob.close()
+          bb.size()
+        }
+        println(f"[scale] planscale packed: files=${perFile(partsPacked).size} " +
+          f"parts=${partsPacked.length}%4d plan=$tPacked%6.3f s  " +
+          f"files/bin<=${packed.map(_.files.size).max}%2d  " +
+          f"task-payload<=${binBytes.max}%6d B/bin")
+        require(tPacked < 1.0, f"1k-file packed plan took $tPacked%.2f s (budget 1 s)")
+        require(binBytes.max < 32 * 1024, s"packed bin payload ${binBytes.max} B")
         // (b) depth: synthetic 1M-member sidecar beside one real archive
         val deep = new java.io.File(dirP, "deep")
         deep.mkdirs()
@@ -761,9 +785,7 @@ object ScaleCheck {
         println(f"[scale] planscale 10k explicit-list: files=${fileList.length} " +
           f"parts=${partsList.length}%6d plan=$tList%6.3f s " +
           f"(glob plan $tGlob%6.3f s, ratio ${tList / tGlob}%4.2f)")
-        def idxParts(a: Array[_]): Int = a.count {
-          case p: graft.sources.WarcInputPartition => p.idx.isDefined
-          case _ => false }
+        def idxParts(a: Array[InputPartition]): Int = perFile(a).count(_.idx.isDefined)
         require(fileList.length == 10000, s"corpus has ${fileList.length} files")
         require(idxParts(partsList) == idxParts(partsGlob) && idxParts(partsList) > 0,
           s"explicit list planned ${idxParts(partsList)} idx partitions vs glob ${idxParts(partsGlob)}")
@@ -789,7 +811,7 @@ object ScaleCheck {
           } finally w.close()
         }
         val shardScratch = new java.io.File(consDir, "scratch").getPath
-        def consPlan(): (Array[_], Double) = timedPlan(Map(
+        def consPlan(): (Array[InputPartition], Double) = timedPlan(Map(
           "path" -> dirP,
           "member_index" -> consIdx.getPath,
           "member_index_shard_bytes" -> (8L * 1024 * 1024).toString,
@@ -798,9 +820,7 @@ object ScaleCheck {
         val h2 = usedHeap()
         val (partsCons, tCons) = consPlan()
         val hCons = usedHeap() - h2
-        val consSlices = partsCons.collect {
-          case p: graft.sources.WarcInputPartition
-            if p.path.endsWith(".warc.gz") => p }
+        val consSlices = perFile(partsCons).filter(_.path.endsWith(".warc.gz"))
         require(consSlices.nonEmpty &&
           consSlices.forall(p => p.memberOffsets.isEmpty && p.idx.isDefined),
           "consolidated-CDXJ plan embedded member offsets — the O(members) " +

@@ -113,6 +113,35 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     org.apache.commons.io.FileUtils.deleteDirectory(landing.toFile)
   }
 
+  test("a micro-batch of 8 landed archives packs them into fewer " +
+      "partitions than files; its rows equal the single-file scans'") {
+    val landing = Files.createTempDirectory("warc-landing-pack")
+    val names = (0 until 8).map(i => s"pack-$i.warc.gz")
+    names.foreach(n => Files.copy(Paths.get(graft.sources.BenchCorpus.FixtureGz),
+      landing.resolve(n)))
+    val parts = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val seen = scala.collection.mutable.ArrayBuffer.empty[(String, Long, String)]
+    val query = spark.readStream.format("warc").load(landing.toString)
+      .writeStream
+      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+        parts += df.rdd.getNumPartitions
+        seen ++= df.select("filename", "offset", "record_id").collect()
+          .map(r => (r.getString(0), r.getLong(1), r.getString(2)))
+        ()
+      }
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    try query.processAllAvailable() finally query.stop()
+    assert(parts.nonEmpty && parts.head < names.size,
+      s"8 small archives planned ${parts.head} partitions")
+    val single = names.flatMap(n =>
+      spark.read.format("warc").load(landing.resolve(n).toString)
+        .select("filename", "offset", "record_id").collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getString(2))))
+    assert(seen.sorted == single.sorted && seen.size == 400)
+    org.apache.commons.io.FileUtils.deleteDirectory(landing.toFile)
+  }
+
   test("streaming scan consumes .warc.zst landings — codec auto-detect " +
       "holds in the micro-batch path, dictionary archives included") {
     val landing = Files.createTempDirectory("warc-zst-landing")
